@@ -1,7 +1,7 @@
 """Catalog-handle cache freshness (VERDICT r6 #7).
 
-q_delete_visibility caches the opened index handle per
-(sf_dir, SparkContext).  The handle pins the manifest at open time, so
+q_delete_visibility caches the opened index handle as a session
+artifact (queries._ARTIFACTS) whose key ends in the commit fingerprint.  The handle pins the manifest at open time, so
 a commit AFTER cache-fill (another delete + flush here) must refresh
 the handle — a stale reader would silently serve pre-delete results in
 a long-lived serving process.  commit_fingerprint is the guard: it
@@ -50,18 +50,19 @@ def test_cached_delete_visibility_handle_refreshes_on_commit(spark):
     import tempfile
 
     from toshi_spark.index.catalog import IndexCatalog
-    from toshi_spark.queries import _CAT_OPEN_CACHE, QUERIES
+    from toshi_spark.queries import _ARTIFACTS, QUERIES
 
     q = QUERIES["ft_delete_visibility"]
     tag = hashlib.md5(SF_DIR.encode()).hexdigest()[:8]
     base = os.path.join(tempfile.gettempdir(), f"toshi_spark_cat_{tag}")
     cat = IndexCatalog(spark, base)
+    scope = ("ft_delete_visibility", SF_DIR, id(spark.sparkContext))
     try:
         rows0 = q(spark, SF_DIR).collect()
         assert len(rows0) > 0  # 'data' matches pre-second-delete
-        key = (SF_DIR, id(spark.sparkContext))
-        assert key in _CAT_OPEN_CACHE, "first call must fill the cache"
-        stale_fp = _CAT_OPEN_CACHE[key][0]
+        handles = [k for k in _ARTIFACTS if k[:3] == scope]
+        assert len(handles) == 1, "first call must fill the cache"
+        stale_fp = handles[0][-1]
         # second committed mutation on the SAME index
         n = cat.delete_term("docs_del", {"text": "data"})
         assert n > 0
@@ -75,7 +76,8 @@ def test_cached_delete_visibility_handle_refreshes_on_commit(spark):
         # the shared setup is now mutated beyond what the oracle
         # expects — drop it so the next caller rebuilds from scratch
         cat.delete_index("docs_del")
-        _CAT_OPEN_CACHE.pop((SF_DIR, id(spark.sparkContext)), None)
+        for k in [k for k in _ARTIFACTS if k[:3] == scope]:
+            _ARTIFACTS.pop(k)
     # and the rebuild path works: a fresh call reconstructs the
     # canonical post-first-delete view
     rows2 = q(spark, SF_DIR).collect()

@@ -26,7 +26,7 @@ from toshi_spark.pipeline.training import (
     pack_sequences,
     tokens_col as tr_tokens,
 )
-from toshi_spark.queries import _CORPUS_CACHE, analyzed_corpus
+from toshi_spark.queries import _ARTIFACTS, analyzed_corpus
 
 
 @pytest.fixture(scope="module")
@@ -140,8 +140,10 @@ def test_analyzed_corpus_cached_per_session(spark):
 
     from toshi_spark.checkpoint import ENV_VAR
 
-    key = (sf, id(spark.sparkContext), False, os.environ.get(ENV_VAR))
-    assert key in _CORPUS_CACHE
+    scope = ("analyzed_corpus", sf, id(spark.sparkContext),
+             os.environ.get(ENV_VAR))
+    [key] = [k for k in _ARTIFACTS if k[:4] == scope]
+    assert _ARTIFACTS[key] is a
     # the artifact plan is a materialized scan — no tokenizer re-run
     plan = a._jdf.queryExecution().executedPlan().toString()
     assert "split" not in plan.lower()

@@ -1,18 +1,22 @@
-"""Round-trip the reference repo's own example files (read-only).
+"""Round-trip Toshi's documented example files through the API.
 
-/root/reference/schema.json is Toshi's documented example schema
-(lyrics corpus); /root/reference/doc.json is an example AddDocument
-body.  Creating an index from the exact schema JSON and adding the
-exact document exercises the full Toshi-compatible surface on real
-reference artifacts.
+fixtures/lyrics_schema.json reconstructs Toshi's example schema (lyrics
+corpus); fixtures/lyrics_doc.json is an example AddDocument body (see
+fixtures/README.md).  Creating an index from the schema JSON and adding
+the document exercises the Toshi-compatible surface on both option
+shapes: ``indexing`` objects on text fields, flat ``indexed`` on ints.
 """
 
 import json
+import os
 
 import pytest
 
 from toshi_spark.api import ToshiApi
 from toshi_spark.index.catalog import IndexCatalog
+
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        "fixtures")
 
 
 @pytest.fixture(scope="module")
@@ -21,11 +25,11 @@ def api(spark, tmp_path_factory):
 
 
 def test_reference_schema_and_doc_roundtrip(api):
-    with open("/root/reference/schema.json") as f:
+    with open(os.path.join(FIXTURES, "lyrics_schema.json")) as f:
         schema_body = json.load(f)
     code, _ = api.handle("PUT", "/lyrics/_create", schema_body)
     assert code == 201
-    with open("/root/reference/doc.json") as f:
+    with open(os.path.join(FIXTURES, "lyrics_doc.json")) as f:
         add_body = json.load(f)
     code, _ = api.handle("PUT", "/lyrics", add_body)  # commit: true
     assert code == 201

@@ -2,20 +2,21 @@
 
 A production dedup/mix run materializes each phase's output (pairs →
 clusters → filtered corpus) as parquet and the next phase reads it.
-`queries._staged` is the session-scoped form of that contract; these
+`queries._staged` is the session-scoped form of that contract (one
+entry of the session-artifact registry, ``queries._ARTIFACTS``); these
 tests pin that every consumer of a staged artifact returns results
 IDENTICAL to running the full pipeline live (the oracle-parity suite
 covers the same wiring against DuckDB at sf0.01).
 """
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from toshi_spark.queries import (
-    _CORPUS_CACHE,
-    _PAIRS_CACHE,
-    _STAGE_CACHE,
+    _ARTIFACTS,
+    QUERIES,
     _get_verified_pairs,
-    _stage_key,
+    _held_frames,
     analyzed_corpus,
     release_session_artifacts,
     staged_clusters,
@@ -28,8 +29,15 @@ def rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _entries(spark, name):
+    """Registry keys of artifact ``name`` over SF in this session."""
+    scope = (name, SF, id(spark.sparkContext))
+    return [k for k in _ARTIFACTS if k[:3] == scope]
+
+
 def _evict(spark, stage):
-    _STAGE_CACHE.pop(_stage_key(stage, SF, spark), None)
+    for k in _entries(spark, stage):
+        _ARTIFACTS.pop(k)
 
 
 def test_staged_clusters_bit_identical_to_live(spark):
@@ -70,7 +78,7 @@ def test_mix_stable_across_artifact_cache(spark):
 
     _evict(spark, "atm_selected")
     first = rows(q_assemble_training_mix(spark, SF))
-    assert _stage_key("atm_selected", SF, spark) in _STAGE_CACHE
+    assert _entries(spark, "atm_selected")
     second = rows(q_assemble_training_mix(spark, SF))
     assert first == second
     assert len(first) > 0
@@ -78,18 +86,49 @@ def test_mix_stable_across_artifact_cache(spark):
 
 def test_release_session_artifacts(spark):
     """The serving-process knob: release drops every artifact for THIS
-    context, results are identical after a lazy rebuild."""
+    context and unpersists every frame they cached; results are
+    identical after a lazy rebuild."""
     from toshi_spark.queries import q_dedup_survivors
 
-    before = rows(q_dedup_survivors(spark, SF))  # populates artifacts
     sc_id = id(spark.sparkContext)
-    assert any(k[1] == sc_id for k in _CORPUS_CACHE)
+
+    def session_keys():
+        return [k for k in _ARTIFACTS if k[2] == sc_id]
+
+    # pipeline artifacts: tokens corpus, verified pairs, staged clusters
+    before = rows(q_dedup_survivors(spark, SF))  # populates artifacts
+    assert _entries(spark, "analyzed_corpus_aug")
     n = release_session_artifacts(spark)
     assert n >= 2  # at least corpus + one staged artifact
-    for cache, pos in ((_CORPUS_CACHE, 1), (_PAIRS_CACHE, 1),
-                       (_STAGE_CACHE, 2)):
-        assert not [k for k in cache if k[pos] == sc_id]
+    assert not session_keys()
     assert rows(q_dedup_survivors(spark, SF)) == before  # rebuilds
+
+    # index-style artifacts: index handle, encoded blocks, IVF cells,
+    # verified pairs and the fuzzy-eval artifact all hold persisted
+    # frames; release must free every one of them.  Start from an empty
+    # CacheManager (earlier tests cache frames of their own) so that
+    # "empty after release" covers frames the bookkeeping might miss.
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    release_session_artifacts(spark)
+    spark.catalog.clearCache()
+    keys = ["ft_term_bm25", "ft_blockmax_topk", "ann_ivf",
+            "dedup_clusters", "fuzzy_contamination"]
+    before = {k: rows(QUERIES[k](spark, SF)) for k in keys}
+    held = {}
+    for name in ["index", "blocks", "ivf", "verified_pairs", "fuzzy_eval"]:
+        [key] = _entries(spark, name)
+        held[name] = _held_frames(_ARTIFACTS[key])
+        assert any(f.storageLevel != StorageLevel.NONE
+                   for f in held[name]), f"{name} holds no cached frame"
+    ix = _ARTIFACTS[_entries(spark, "index")[0]]
+    held["index"] += [ix.corpus, ix.termstats]  # row store + dictionary
+    assert release_session_artifacts(spark) >= len(held)
+    assert not session_keys()
+    for name, frames in held.items():
+        for f in frames:
+            assert f.storageLevel == StorageLevel.NONE, name
+    assert cache_manager.isEmpty()
+    assert {k: rows(QUERIES[k](spark, SF)) for k in keys} == before
 
 
 def test_mix_selected_artifact_matches_live_filters(spark):
@@ -106,7 +145,8 @@ def test_mix_selected_artifact_matches_live_filters(spark):
 
     _evict(spark, "atm_selected")
     q_assemble_training_mix(spark, SF).collect()  # populate
-    art = _STAGE_CACHE[_stage_key("atm_selected", SF, spark)]
+    [key] = _entries(spark, "atm_selected")
+    art = _ARTIFACTS[key]
 
     aug = analyzed_corpus(spark, SF, augmented=True)
     keep_g = gopher_filter(aug, toks_col="toks").filter(

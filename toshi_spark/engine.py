@@ -83,6 +83,9 @@ class FullTextIndex:
         # scans here so phrase/bool intersections group by doc_id
         # without a corpus-scale Exchange
         self.doc_bucketed = None
+        # frames build() persist()ed (index tables + row store), so an
+        # owner can release them
+        self.persisted = list(tables.persisted)
 
     # convenience accessors used by the compiler
     @property
@@ -160,7 +163,10 @@ class FullTextIndex:
                     and cache_partitions < corpus.rdd.getNumPartitions()):
                 corpus = corpus.repartition(cache_partitions)
             corpus = corpus.persist()
-        return cls(spark, schema, corpus, tables, id_col=id_col, name=name)
+        ix = cls(spark, schema, corpus, tables, id_col=id_col, name=name)
+        if cache:
+            ix.persisted.append(corpus)
+        return ix
 
     # ------------------------------------------------------------- search
 

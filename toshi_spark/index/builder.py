@@ -23,7 +23,7 @@ cheap re-aggregation (scores are additive per doc).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -43,6 +43,8 @@ class IndexTables:
     termstats: DataFrame  # field, term, df
     fieldstats: DataFrame  # field, avgdl
     n_docs: int
+    # the frames build_index persist()ed, so an owner can release them
+    persisted: list[DataFrame] = field(default_factory=list)
 
     @property
     def avgdl(self) -> float:
@@ -102,7 +104,9 @@ def build_index(
     quantized norms).  Default OFF: exact lengths.
 
     The analyzed intermediate feeds four consumers, so it is persisted
-    (at segment-write time, parquet on disk plays this role instead).
+    (at segment-write time, parquet on disk plays this role instead);
+    every frame persisted here is listed in ``IndexTables.persisted``
+    so the owner of a cached index can release it.
 
     ``cache_partitions`` — partition count for the CACHED serving
     tables.  A corpus that was spread wide for the per-doc analyzer
@@ -125,11 +129,13 @@ def build_index(
         )
         analyzed = part if analyzed is None else analyzed.unionByName(part)
     assert analyzed is not None, "at least one text field required"
+    persisted = []
     if cache:
         if (cache_partitions is not None
                 and cache_partitions < corpus.rdd.getNumPartitions()):
             analyzed = analyzed.repartition(cache_partitions)
         analyzed = analyzed.persist()
+        persisted.append(analyzed)
     # doc_len rides ALONG in the postings row (the analyzer emits it
     # per (doc, term) anyway): BM25 then needs NO doclens join — the
     # fieldnorm travels with the posting the way Lucene impact-ordered
@@ -149,6 +155,7 @@ def build_index(
         # every scoring query — persist the aggregate so serving reads
         # a cached table instead of re-shuffling postings per search
         termstats = termstats.persist()
+        persisted.append(termstats)
     # ONE metadata job computes avgdl AND n_docs (doclens has exactly
     # one row per (field, doc) including empty-doc sentinels, so the
     # per-field row count IS the doc count): fieldstats becomes a
@@ -185,6 +192,7 @@ def build_index(
         termstats=termstats,
         fieldstats=fieldstats,
         n_docs=n_docs,
+        persisted=persisted,
     )
 
 

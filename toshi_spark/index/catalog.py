@@ -749,7 +749,7 @@ class IndexCatalog:
         excluded, matching deferred-delete visibility.  Long-lived
         serving processes key cached :meth:`open` handles on it so a
         later commit refreshes the handle instead of silently serving
-        the pre-commit view (queries.q_delete_visibility's cache)."""
+        the pre-commit view (queries.q_delete_visibility's handle)."""
         import hashlib
 
         d = self._dir(name)

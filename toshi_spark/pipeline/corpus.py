@@ -14,8 +14,9 @@ downstream stage reads the artifact.
 
 This module holds the pure construction (:func:`with_tokens`); the
 per-``(sf_dir, session)`` cached, ``phase_checkpoint``-materialized
-handle lives in ``queries.analyzed_corpus`` alongside the other
-index-style caches (``_IVF_CACHE``, ``_FUZZY_EVAL_CACHE``).
+handle lives in ``queries.analyzed_corpus``, one entry of the
+session-artifact registry there (with the IVF cells, the fuzzy-eval
+artifact and the index handles).
 
 Consuming operators take the token array as an existing COLUMN
 (``toks_col=...``) rather than a separate frame: a join would shuffle

@@ -32,7 +32,7 @@ toshi_spark.pipeline):
   real crawls), after URL canonicalization so aliases of a blocked
   host cannot slip through.
 
-Tokenization matches q_token_count's ``n_tokens`` definition
+Tokenization matches text_profile's ``n_tokens`` definition
 (lowercased alnum runs) so counts agree across the pipeline.
 """
 
