@@ -1,13 +1,17 @@
 """Session artifacts follow their source tables.
 
 The query suite caches analyzed corpora and index handles per source
-directory.  A table rewritten under the same path must be rebuilt from
-the new rows, the way a Toshi reader reloads on commit: after the
-rewrite, every cached consumer must return exactly what a fresh build
-over the new table returns.
+directory, and the durable gates keep their segments on disk.  A table
+rewritten under the same path must be rebuilt from the new rows, the
+way a Toshi reader reloads on commit: after the rewrite, every cached
+consumer must return exactly what a fresh build over the new table
+returns.
 """
 
+import hashlib
+import os
 import shutil
+import tempfile
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -21,9 +25,14 @@ def rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+# in-memory artifacts, and the two durable gates whose segments and
+# catalog live on disk under a name derived from the source path
+KEYS = ["ft_term_bm25", "ft_segmented_term_bm25", "ft_delete_visibility"]
+
+
 def _snapshot(spark, sf_dir):
     corpus = rows(analyzed_corpus(spark, sf_dir).select("doc_id", "toks"))
-    return corpus, rows(QUERIES["ft_term_bm25"](spark, sf_dir))
+    return (corpus, *(rows(QUERIES[k](spark, sf_dir)) for k in KEYS))
 
 
 def test_rewritten_source_rebuilds_artifacts(spark, tmp_path):
@@ -31,7 +40,19 @@ def test_rewritten_source_rebuilds_artifacts(spark, tmp_path):
     fresh = str(tmp_path / "fresh")
     shutil.copytree(SRC, live)
     shutil.copytree(SRC, fresh)
-    corpus0, bm25_0 = _snapshot(spark, live)  # fills the caches
+    try:
+        _check_rewrite(spark, live, fresh)
+    finally:  # the durable gates' dirs live outside tmp_path
+        for d in (live, fresh):
+            tag = hashlib.md5(d.encode()).hexdigest()[:8]
+            for kind in ("seg", "cat"):
+                shutil.rmtree(os.path.join(tempfile.gettempdir(),
+                                           f"toshi_spark_{kind}_{tag}"),
+                              ignore_errors=True)
+
+
+def _check_rewrite(spark, live, fresh):
+    before = _snapshot(spark, live)  # fills the caches
 
     # overwrite documents.parquet IN PLACE with a strict subset of its
     # rows: odd doc_ids only, which removes part of the 'spark' top-20
@@ -41,7 +62,6 @@ def test_rewritten_source_rebuilds_artifacts(spark, tmp_path):
     pq.write_table(subset, f"{live}/documents.parquet")
     pq.write_table(subset, f"{fresh}/documents.parquet")
 
-    corpus1, bm25_1 = _snapshot(spark, live)
-    want_corpus, want_bm25 = _snapshot(spark, fresh)
-    assert (corpus1, bm25_1) == (want_corpus, want_bm25)
-    assert corpus1 != corpus0 and bm25_1 != bm25_0
+    after = _snapshot(spark, live)
+    assert after == _snapshot(spark, fresh)
+    assert all(a != b for a, b in zip(after, before))

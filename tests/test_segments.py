@@ -103,21 +103,46 @@ def test_segmented_query_matches_single_index(spark, corpus, tmp_path_factory):
     assert top(seg_tables) == top(mono)
 
 
-def test_blockmax_over_segments(spark, corpus, tmp_path_factory):
+def test_blockmax_over_segments(spark, tmp_path_factory):
+    """Block-max over blocks derived from 3 stitched segments with
+    different avgdl scores exactly like plain BM25; segments store no
+    blocks, and the manifest counts equal the written tables."""
+    # 600 docs: doc ids span 3 salt stripes, so the head term w0 (df
+    # above the threshold in every segment) splits into several salts
+    corpus = assign_doc_ids(
+        synth_webtext(spark, 600, seed=7), order_col="url"
+    )
     idx_dir = str(tmp_path_factory.mktemp("ix_bm"))
-    build_segments(spark, corpus, idx_dir, n_chunks=2, index_name="web",
-                   salt_df_threshold=100)
+    entries = build_segments(spark, corpus, idx_dir, n_chunks=3,
+                             index_name="web", salt_df_threshold=50)
+    seg_dirs = [os.path.join(idx_dir, "segments", e.segment_id)
+                for e in entries]
+    avgdls = {json.load(open(f"{d}/stats.json"))["fieldstats"]["text"]
+              for d in seg_dirs}
+    assert len(avgdls) == 3
+    for e, d in zip(entries, seg_dirs):
+        assert not os.path.exists(f"{d}/blocks")
+        assert e.terms == spark.read.parquet(f"{d}/termstats").count()
+        postings = spark.read.parquet(f"{d}/postings")
+        assert e.postings == postings.count()
+        assert postings.filter(F.col("term") == "w0").select(
+            "salt").distinct().count() > 1
+
     tables = open_segmented_tables(spark, idx_dir)
     blocks = open_blocks(spark, idx_dir)
+    terms = ["w0", "w2", "w50"]
     got = blockmax_topk(blocks, tables.termstats, tables.doclens,
                         tables.fieldstats, tables.n_docs, "text",
-                        ["w0", "w2"], 10).collect()
-    m = tables.postings.filter(F.col("term").isin(["w0", "w2"]))
+                        terms, 20).collect()
+    m = tables.postings.filter(F.col("term").isin(terms))
     want = topk(
         bm25_score(m, tables.doclens, tables.termstats, tables.n_docs,
-                   tables.fieldstats), 10
+                   tables.fieldstats), 20
     ).collect()
-    assert [r.doc_id for r in got] == [r.doc_id for r in want]
+    assert len(got) == 20
+    assert [(r.doc_id, round(r.score, 10)) for r in got] == [
+        (r.doc_id, round(r.score, 10)) for r in want
+    ]
 
 
 def test_merge_policy_plan():

@@ -20,7 +20,7 @@ expressed as a parquet table of binary block payloads:
   block-max WAND):
 
   * ``max_tfn`` — the block's EXACT best tf_norm (Tantivy's per-block
-    max score sans idf), computed at the segment's own ``ref_avgdl``.
+    max score sans idf), computed at the encode-time ``ref_avgdl``.
   * ``hi_tfn`` — the HI_RANK-th largest tf_norm in the block (the min
     when count < HI_RANK): the block certifies min(count, HI_RANK)
     postings scoring ≥ hi_tfn, which is what makes a METADATA-ONLY
@@ -30,9 +30,8 @@ expressed as a parquet table of binary block payloads:
     tf_norm at avgdl_q = tf_norm at ref_avgdl × a per-posting ratio
     that is monotone in tf and dl, so its extremes over the block lie
     at the corners of [min_tf,max_tf]×[min_dl,max_dl] — the query-time
-    correction when multi-segment avgdl (a doc-weighted mean) has
-    drifted from ref_avgdl.  Same-avgdl queries get ratio ≡ 1, i.e.
-    exact block impacts.
+    correction when the query avgdl differs from ref_avgdl.  Same-avgdl
+    queries get ratio ≡ 1, i.e. exact block impacts.
 
 Block size 128 mirrors the classic posting-block layout.
 """
@@ -213,9 +212,9 @@ def make_encode_kernel(avgdl_by_field: dict[str, float]):
     pandas machinery per GROUP, which at millions of one-posting runs
     turns encoding into a straggler stage.  Here a run costs one slice.
 
-    ``avgdl_by_field`` is the build-time reference avgdl the block
-    impact stats (max_tfn/hi_tfn) are computed against; it is stored in
-    every block row so query time can correct for avgdl drift.
+    ``avgdl_by_field`` is the reference avgdl the block impact stats
+    (max_tfn/hi_tfn) are computed against; it is stored in every block
+    row so query time can correct for avgdl drift.
     """
     import pyarrow as pa
 
@@ -330,14 +329,6 @@ def make_encode_kernel(avgdl_by_field: dict[str, float]):
     return encode_sorted_partitions
 
 
-def encode_sorted_blocks(arranged, avgdl_by_field: dict[str, float]):
-    """blocks from postings ALREADY partitioned by (field, term, salt)
-    and sorted within partitions by (field, term, salt, doc_id)."""
-    return arranged.select(
-        "field", "term", "salt", "doc_id", "tf", "doc_len"
-    ).mapInArrow(make_encode_kernel(avgdl_by_field), BLOCKS_SCHEMA)
-
-
 def encode_blocks_df(postings_salted, avgdl_by_field: dict[str, float]):
     """postings (field, term, doc_id, tf, doc_len, salt) → blocks.
 
@@ -346,10 +337,14 @@ def encode_blocks_df(postings_salted, avgdl_by_field: dict[str, float]):
     """
     spark = postings_salted.sparkSession
     n_part = spark.sparkContext.defaultParallelism * 2
-    arranged = postings_salted.repartition(
-        n_part, "field", "term", "salt"
-    ).sortWithinPartitions("field", "term", "salt", "doc_id")
-    return encode_sorted_blocks(arranged, avgdl_by_field)
+    return (
+        postings_salted.select(
+            "field", "term", "salt", "doc_id", "tf", "doc_len"
+        )
+        .repartition(n_part, "field", "term", "salt")
+        .sortWithinPartitions("field", "term", "salt", "doc_id")
+        .mapInArrow(make_encode_kernel(avgdl_by_field), BLOCKS_SCHEMA)
+    )
 
 
 def decode_blocks_df(blocks):

@@ -9,7 +9,8 @@ uncommitted work (``handlers/bulk.rs:121-129``).
 
 Spark mapping:
 - a segment = a directory of parquet tables
-  (postings/blocks/doclens/termstats + stats.json + _metrics.jsonl)
+  (postings/doclens/termstats + stats.json + _metrics.jsonl); the
+  block table is derived from postings at open (``open_blocks``)
 - commit = write to ``<seg>.staging`` → atomic rename → append one
   JSON line to ``manifest.jsonl`` (the manifest append IS the commit
   point; readers list the manifest, never the directory)
@@ -23,6 +24,7 @@ Spark mapping:
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -30,9 +32,10 @@ import shutil
 import time
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .blocks import encode_sorted_blocks
+from .blocks import encode_blocks_df
 from .builder import IndexTables, build_index, salted_postings
 
 
@@ -42,7 +45,9 @@ from .builder import IndexTables, build_index, salted_postings
 # doc_len; v4: blocks carry min_tf/min_dl/max_dl bounds + inline
 # varint doc lengths).  The version is ALSO recorded per ManifestEntry
 # so readers fail fast on a stale manifest instead of silently reading
-# mixed-schema parquet (null doc_len → null BM25 scores).
+# mixed-schema parquet (null doc_len → null BM25 scores).  Dropping
+# blocks/ (open_blocks derives them) changed no table a reader opens, so
+# v4 stands: a v4 segment's leftover blocks/ dir is never read.
 SEGMENT_FORMAT_VERSION = 4
 
 # pinned read schemas for the v4 on-disk layout.  _check_format
@@ -58,13 +63,6 @@ POSTINGS_READ_SCHEMA = (
 )
 DOCLENS_READ_SCHEMA = "field string, doc_id bigint, doc_len int"
 TERMSTATS_READ_SCHEMA = "field string, term string, df bigint"
-BLOCKS_READ_SCHEMA = (
-    "field string, term string, salt int, block_id int, "
-    "first_doc bigint, last_doc bigint, count int, max_tf int, "
-    "min_tf int, min_dl bigint, max_dl bigint, max_tfn double, "
-    "hi_tfn double, ref_avgdl double, doc_deltas binary, tfs binary, "
-    "dls binary, seg string"
-)
 
 
 @dataclass
@@ -167,6 +165,15 @@ def _recreatable_stale_ids(
     return ids
 
 
+def _parquet_rows(path: str) -> int:
+    """Row count of a parquet table directory, read from the footers of
+    its files on the driver (no Spark job)."""
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows
+        for f in glob.glob(os.path.join(path, "*.parquet"))
+    )
+
+
 def _dir_bytes(path: str) -> int:
     total = 0
     for root, _dirs, files in os.walk(path):
@@ -210,34 +217,18 @@ def write_segment(
     salted = salted_postings(
         tables.postings, tables.termstats, salt_df_threshold, n_salts
     )
-    # persist the arranged layout: it feeds both the postings write and
-    # the block encoder, and the encoder REQUIRES partition-local run
-    # integrity (re-reading the written files could split a run across
-    # scan partitions at file-split boundaries)
-    arranged = (
+    (
         salted.repartitionByRange(
             term_partitions, F.col("field"), F.col("term"), F.col("salt")
         )
         .sortWithinPartitions("field", "term", "salt", "doc_id")
-        .persist()
+        .write.mode("overwrite")
+        .parquet(f"{staging}/postings")
     )
-    arranged.write.mode("overwrite").parquet(f"{staging}/postings")
 
     fieldstats = {
         r["field"]: float(r["avgdl"]) for r in tables.fieldstats.collect()
     }
-    # encode straight off the arranged partitions (no second shuffle,
-    # no per-group pandas); seg id is a literal column (NOT derived
-    # from input_file_name at read time — that projection would block
-    # parquet filter pushdown); block impact stats reference this
-    # segment's own avgdl (recorded per block for query-time drift
-    # correction against the stitched multi-segment avgdl)
-    blocks = encode_sorted_blocks(arranged, fieldstats).withColumn(
-        "seg", F.lit(segment_id)
-    )
-    blocks.write.mode("overwrite").parquet(f"{staging}/blocks")
-    arranged.unpersist()
-
     tables.doclens.write.mode("overwrite").parquet(f"{staging}/doclens")
     # dictionary sorted by (field, term): parquet min/max stats give
     # prefix-range pruning for regex/fuzzy dictionary scans
@@ -250,8 +241,13 @@ def write_segment(
         .parquet(f"{staging}/termstats")
     )
 
-    n_terms = tables.termstats.count()
-    n_postings = tables.postings.count()
+    # the parquet replaces the build's cached frames; left cached over
+    # the source, they would serve its old rows to a rebuild of the path
+    for df in tables.persisted:
+        df.unpersist()
+
+    n_terms = _parquet_rows(f"{staging}/termstats")
+    n_postings = _parquet_rows(f"{staging}/postings")
     with open(f"{staging}/stats.json", "w") as f:
         json.dump(
             {"n_docs": tables.n_docs, "fieldstats": fieldstats,
@@ -404,12 +400,14 @@ def migrate_stale_segments(
 
     Works for any older layout whose RAW tables are column-compatible
     (postings: field/term/doc_id/tf[/positions]; doclens:
-    field/doc_id/doc_len): the derived artifacts (blocks with impact
-    bounds, termstats, stats.json) are recomputed from the raw tables
-    exactly as a fresh write would.  Each stale segment is rewritten
-    under a new content-addressed id and the manifest is swapped in ONE
-    ``replace_all`` — readers never observe a mixed old/new state, and
-    a crash mid-migration leaves the old manifest fully intact.
+    field/doc_id/doc_len): the derived tables (salted postings with
+    inline doc_len, termstats, stats.json) are recomputed from the raw
+    tables exactly as a fresh write would.  An older segment's blocks/
+    dir is not carried over: blocks are derived at open.  Each stale
+    segment is rewritten under a new content-addressed id and the
+    manifest is swapped in ONE ``replace_all`` — readers never observe
+    a mixed old/new state, and a crash mid-migration leaves the old
+    manifest fully intact.
     Returns the new segment ids.
     """
     manifest = Manifest(index_dir)
@@ -543,14 +541,7 @@ def open_segmented_tables(spark: SparkSession, index_dir: str) -> IndexTables:
     re-aggregated across segments: df and doclens add; avgdl is the
     doc-weighted mean.
     """
-    manifest = Manifest(index_dir)
-    entries = manifest.entries()
-    if not entries:
-        raise FileNotFoundError(f"no committed segments in {index_dir}")
-    _check_format(entries, index_dir)
-    seg_dirs = [
-        os.path.join(index_dir, "segments", e.segment_id) for e in entries
-    ]
+    seg_dirs = _segment_dirs(index_dir)
     postings = spark.read.schema(POSTINGS_READ_SCHEMA).parquet(
         *[f"{d}/postings" for d in seg_dirs]
     ).drop("salt")
@@ -599,6 +590,17 @@ def open_segmented_tables(spark: SparkSession, index_dir: str) -> IndexTables:
     )
 
 
+def _segment_dirs(index_dir: str) -> list[str]:
+    """Directories of the manifest's committed segments."""
+    entries = Manifest(index_dir).entries()
+    if not entries:
+        raise FileNotFoundError(f"no committed segments in {index_dir}")
+    _check_format(entries, index_dir)
+    return [
+        os.path.join(index_dir, "segments", e.segment_id) for e in entries
+    ]
+
+
 def _check_format(entries: list[ManifestEntry], index_dir: str) -> None:
     """Fail fast on a manifest carrying older-format segments: reading
     mixed segment layouts would drop or null new columns silently."""
@@ -615,16 +617,12 @@ def _check_format(entries: list[ManifestEntry], index_dir: str) -> None:
 
 
 def open_blocks(spark: SparkSession, index_dir: str) -> DataFrame:
-    manifest = Manifest(index_dir)
-    entries = manifest.entries()
-    _check_format(entries, index_dir)
-    seg_dirs = [
-        os.path.join(index_dir, "segments", e.segment_id)
-        for e in entries
-    ]
-    # 'seg' disambiguates block keys across segments (the block-max
-    # path dedupes on the block key); it is a stored column so term
-    # filters still push down to the parquet scan
-    return spark.read.schema(BLOCKS_READ_SCHEMA).parquet(
-        *[f"{d}/blocks" for d in seg_dirs]
+    """Block table (``index.blocks``) of the committed segments, encoded
+    from their stored postings and salts at the stitched avgdl of
+    ``open_segmented_tables`` — the avgdl the blocks are queried with."""
+    fieldstats = open_segmented_tables(spark, index_dir).fieldstats
+    avgdl = {r["field"]: float(r["avgdl"]) for r in fieldstats.collect()}
+    postings = spark.read.schema(POSTINGS_READ_SCHEMA).parquet(
+        *[f"{d}/postings" for d in _segment_dirs(index_dir)]
     )
+    return encode_blocks_df(postings, avgdl)

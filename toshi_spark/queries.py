@@ -15,6 +15,7 @@ runs, <40-byte, lowercase) coincides exactly with
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 from collections.abc import Callable
 
@@ -46,7 +47,9 @@ DOC_SCHEMA = IndexSchema(
 # the source tables, plus any extra key parts.  A table rewritten under
 # the same path therefore misses and rebuilds — the way a Toshi reader
 # reloads on commit (handle.rs:232) — and the superseded entry of the
-# same (name, sf_dir, session) is evicted and its frames unpersisted.
+# same (name, sf_dir, session) is evicted and its frames unpersisted,
+# with every artifact of that sf_dir built from an older source: Spark's
+# cache matches a scan by path, so it would serve their old rows.
 
 _ARTIFACTS: dict[tuple, object] = {}
 
@@ -57,6 +60,11 @@ def _source_fingerprint(sf_dir: str) -> tuple:
         st = os.stat(path)
         out.append((path, st.st_size, st.st_mtime_ns))
     return tuple(out)
+
+
+def _source_digest(sf_dir: str) -> str:
+    """Stamp for on-disk artifacts, which the registry cannot evict."""
+    return hashlib.md5(repr(_source_fingerprint(sf_dir)).encode()).hexdigest()
 
 
 def _held_frames(value) -> list[DataFrame]:
@@ -88,7 +96,8 @@ def _artifact(spark: SparkSession, name: str, sf_dir: str,
     key = (name, sf_dir, id(spark.sparkContext), os.environ.get(_CKPT_ENV),
            _source_fingerprint(sf_dir), *extra)
     if key not in _ARTIFACTS:
-        for old in [k for k in _ARTIFACTS if k[:3] == key[:3]]:
+        for old in [k for k in _ARTIFACTS if k[1:3] == key[1:3]
+                    and (k[0] == name or k[4] != key[4])]:
             _drop(old)
         _ARTIFACTS[key] = build()
     return _ARTIFACTS[key]
@@ -801,9 +810,9 @@ def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _get_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Encoded block table per sf_dir — an INDEX artifact (segments
-    pre-encode blocks at write time, see segments.write_segment), so
-    serving queries must not pay re-encoding; cache like get_index."""
+    """Encoded block table per sf_dir — an INDEX artifact, encoded once
+    per source version so serving queries do not pay re-encoding; cache
+    like get_index."""
 
     def build():
         ix = get_index(spark, sf_dir)
@@ -817,9 +826,7 @@ def _get_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
         # launches per stage.  A coalesce here would propagate upstream
         # (no shuffle barrier) and collapse the encode kernel itself to
         # n_parts tasks; the repartition's shuffle keeps the encode at
-        # full width and only the (small) encoded rows move.  (durable
-        # indexes read blocks from parquet, where file sizing picks the
-        # partition count.)
+        # full width and only the (small) encoded rows move.
         n_parts = max(1, spark.sparkContext.defaultParallelism // 4)
         return encode_blocks_df(salted, avgdl).repartition(n_parts).persist()
 
@@ -1323,11 +1330,11 @@ QUERIES["embedding_neardup"] = q_embedding_neardup
 
 def q_segmented_term_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Durable-path gate: build on-disk segments (chunked, salted,
-    block-encoded, manifest-committed), reopen from the manifest, and
-    run the BM25 term query over the stitched segments.  Oracle is the
-    same BM25 SQL — proving write→commit→open→query is lossless."""
-    import hashlib
-    import os
+    manifest-committed), reopen from the manifest, and run the BM25
+    term query over the stitched segments.  Oracle is the same BM25
+    SQL — proving write→commit→open→query is lossless.  A rewritten
+    source (see the dir's ``_source`` stamp) drops the dir and rebuilds."""
+    import shutil
     import tempfile
 
     from .index.segments import build_segments, open_segmented_tables
@@ -1335,6 +1342,13 @@ def q_segmented_term_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     idx_dir = os.path.join(tempfile.gettempdir(), f"toshi_spark_seg_{tag}")
+    marker = os.path.join(idx_dir, "_source")
+    digest = _source_digest(sf_dir)
+    if not (os.path.exists(marker) and open(marker).read() == digest):
+        shutil.rmtree(idx_dir, ignore_errors=True)
+        os.makedirs(idx_dir)
+        with open(marker, "w") as f:
+            f.write(digest)
     build_segments(
         spark, docs, idx_dir, id_col="doc_id", text_fields="text",
         n_chunks=2, index_name="documents", fingerprint=sf_dir,
@@ -1560,9 +1574,6 @@ def q_delete_visibility(spark: SparkSession, sf_dir: str) -> DataFrame:
     deleted docs until a merge folds the tombstones in — the oracle
     recomputes exactly that (global stats, matched docs filtered).
     """
-    import hashlib
-    import os
-    import shutil
     import tempfile
 
     from .index.catalog import IndexCatalog
@@ -1572,7 +1583,8 @@ def q_delete_visibility(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(tempfile.gettempdir(), f"toshi_spark_cat_{tag}")
     name = "docs_del"
     marker = os.path.join(base, name, "_delete_vis_ready")
-    stamp = f"fmt{SEGMENT_FORMAT_VERSION}:v1"
+    # the source digest rebuilds the index when the source is rewritten
+    stamp = f"fmt{SEGMENT_FORMAT_VERSION}:v1:{_source_digest(sf_dir)}"
     cat = IndexCatalog(spark, base)
     if not (os.path.exists(marker) and open(marker).read() == stamp):
         cat.delete_index(name)  # stale/partial setup from a prior run

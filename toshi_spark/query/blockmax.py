@@ -28,12 +28,12 @@ comes from block METADATA alone (no seed decode), so the plan is:
 
 Bound construction:
 
-  each block stores its EXACT impact stats at the segment's build
-  avgdl: max_tfn (BlockWAND's per-block max score sans idf) and hi_tfn
-  (the HI_RANK-th largest tf_norm — the block certifies
+  each block stores its EXACT impact stats at the avgdl it was encoded
+  with (ref_avgdl): max_tfn (BlockWAND's per-block max score sans idf)
+  and hi_tfn (the HI_RANK-th largest tf_norm — the block certifies
   min(count, HI_RANK) postings ≥ hi_tfn; a doc_id-ordered block's MIN
   is near the corpus floor and would prune nothing).  When query-time
-  avgdl differs (stitched multi-segment mean), the per-posting ratio
+  avgdl differs from ref_avgdl, the per-posting ratio
   tfn_q/tfn_ref = (tf+A+C_r·dl)/(tf+A+C_q·dl) is monotone in tf and
   dl, so its extremes lie at the corners of
   [min_tf,max_tf]×[min_dl,max_dl]:
@@ -43,8 +43,8 @@ Bound construction:
 
   τ_t = the crossing block's hi when Σ min(count, HI_RANK) in hi-desc
   order first reaches k — sound because a term's postings are distinct
-  docs (salts split by doc_id, segments are disjoint) and total score
-  only adds over terms.  τ = max_t τ_t.  A block survives iff
+  docs (salts split by doc_id) and total score only adds over terms.
+  τ = max_t τ_t.  A block survives iff
 
       ub(block) + Σ_{t'≠t} max_ub(t') ≥ τ.
 
@@ -82,8 +82,8 @@ _PAIR_TOP = 64
 _PAIR_SEEDS = 16
 
 # per-term slack in the a-priori block-count ceiling for one partial
-# block per (salt, segment) run — see the overflow probe in
-# _block_bounds (16 salts × 256 live segments of headroom)
+# block per salt run — see the overflow probe in _block_bounds (far
+# past the 16 salts any block producer uses)
 _RUN_SLACK = 4096
 
 # minimum estimated prunable-posting fraction for the seed-θ job to
@@ -144,8 +144,8 @@ def _overlap_rest(rows, val_arrays=None):
 
         score(d) ≤ ub(b) + Σ_{t'≠t} max{ub(b') : b' of t', b'∩b ≠ ∅}
 
-    Per term, a (salt, segment) run's blocks are disjoint sorted
-    doc-id intervals, so each overlap query is two binary searches +
+    Per term, a salt run's blocks are disjoint sorted doc-id
+    intervals, so each overlap query is two binary searches +
     an O(1) sparse-table range-max — vectorized with numpy over all
     collected blocks at once.
 
@@ -169,13 +169,10 @@ def _overlap_rest(rows, val_arrays=None):
     term_arr = np.array([r["term"] for r in rows])
     total = [np.zeros(n, dtype=np.float64) for _ in range(nv)]
     own = [np.zeros(n, dtype=np.float64) for _ in range(nv)]
-    has_seg = bool(rows) and "seg" in rows[0].__fields__
     by_term_runs: dict[str, dict] = {}
     for i, r in enumerate(rows):
         runs = by_term_runs.setdefault(r["term"], {})
-        runs.setdefault(
-            (r["salt"], r["seg"] if has_seg else None), []
-        ).append(i)
+        runs.setdefault(r["salt"], []).append(i)
     for t, runs in by_term_runs.items():
         contrib = [np.zeros(n, dtype=np.float64) for _ in range(nv)]
         for idxs in runs.values():
@@ -276,7 +273,6 @@ def _seed_theta(
     # parquet pushes these to row-group stats, so at 10^12-doc scale
     # the seed job reads ~|seed| blocks' payloads, not the whole
     # candidate term's
-    has_seg = "seg" in meta.columns
     cond = None
     for r in seed_keys:
         c = (
@@ -284,8 +280,6 @@ def _seed_theta(
             & (F.col("salt") == r["salt"])
             & (F.col("block_id") == r["block_id"])
         )
-        if has_seg:
-            c = c & (F.col("seg") == r["seg"])
         cond = c if cond is None else (cond | c)
     # ONE narrow pushed-filter collect of the ≤ |seed| payload rows,
     # scored DRIVER-SIDE in numpy: the seed set is a metadata-chosen
@@ -465,14 +459,11 @@ def _block_bounds(
         ub = idf * F.col("max_tfn") * F.greatest(*corners)
         hi = idf * F.col("hi_tfn") * F.least(*corners)
         hi_n = F.least(F.col("count"), F.lit(HI_RANK)).cast("long")
-    key_cols = ["term", "salt", "block_id"]
-    if "seg" in meta.columns:
-        key_cols.append("seg")
     meta = (
         meta.withColumn("ub", ub)
         .withColumn("hi", hi)
         .withColumn("hi_n", hi_n)
-        .withColumn("_bkey", F.concat_ws("|", *key_cols))
+        .withColumn("_bkey", F.concat_ws("|", "term", "salt", "block_id"))
     )
 
     # job 1: per-term (τ_t, max_ub) off metadata columns only.  When the
@@ -480,29 +471,26 @@ def _block_bounds(
     # exchanges) beats the window plan's two shuffles; past the bound
     # (10^9+ doc terms) the distributed window is the scale shape.
     # The bound is enforced EXACTLY via limit(bound+1) — an a-priori
-    # estimate under-counts partial blocks (each (term, salt, segment)
-    # run ends in one): with 16 salts × many flush/merge segments the
-    # real row count can exceed len(terms)·(n_docs/128 + c) and
-    # pressure driver memory.  limit() collects incrementally, so the
-    # overflow probe costs at most one extra partition scan before
+    # estimate under-counts partial blocks (each (term, salt) run ends
+    # in one), so the real row count can exceed len(terms)·n_docs/128
+    # and pressure driver memory.  limit() collects incrementally, so
+    # the overflow probe costs at most one extra partition scan before
     # falling back to the distributed plan.
     dfs: dict[str, int] = {}
     seed_keys: list[str] | None = None
     meta_rows = None
     sel = ["term", "df", "hi", "hi_n", "ub", "_bkey", "salt",
            "block_id", "first_doc", "last_doc", "count"]
-    if "seg" in meta.columns:
-        sel.append("seg")
     # overflow probe gate: blocks per term ≤ ⌈n_docs/BLOCK_SIZE⌉ plus
-    # one partial block per (salt, segment) run, so when the a-priori
-    # ceiling is comfortably under COLLECT_BOUND the wide collect
+    # one partial block per salt run, so when the a-priori ceiling is
+    # comfortably under COLLECT_BOUND the wide collect
     # cannot overflow and runs directly (the common case, one job).
     # Only when the ceiling says overflow is POSSIBLE (10^9+-doc
     # terms) does a narrow single-column count probe run first, so the
     # overflow path never materializes COLLECT_BOUND wide rows (~100s
     # of MB) on the driver just to discard them.  _RUN_SLACK covers
-    # the partial-block term: 16 salts × 256 live segments is far past
-    # any real manifest; an index beyond it merely pays the probe.
+    # the partial-block term; a salt count beyond it merely pays the
+    # probe.
     est_ceiling = len(terms) * (-(-n_docs // 128) + _RUN_SLACK)
     overflowed = False
     if est_ceiling > COLLECT_BOUND:
