@@ -13,6 +13,7 @@ from toshi_spark.engine import FullTextIndex
 from toshi_spark.query.compiler import _damerau
 from toshi_spark.query.dsl import parse_search
 from toshi_spark.schema import FieldSpec, IndexSchema
+from toshi_spark.session import bounded_collect
 
 # one term per doc → matched doc ids ARE the matched dictionary terms
 VOCAB = [
@@ -50,16 +51,36 @@ def test_damerau_matches_bruteforce(ix, dist):
     assert "sprak" in got
 
 
-def test_distance1_plan_has_no_python_worker(ix):
-    _, df = _matched_terms(ix, 1)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    for py in ("ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
-        assert py not in plan, plan
+def _expansion_plans(ix, dist, monkeypatch) -> tuple[str, str]:
+    """Executed plans of the dictionary expansion (collected on its own
+    by ``bounded_collect`` before the search plan is built) and of the
+    search itself."""
+    from toshi_spark.query import compiler
+
+    seen = []
+
+    def spy(df, *bounds):
+        seen.append(df)
+        return bounded_collect(df, *bounds)
+
+    monkeypatch.setattr(compiler, "bounded_collect", spy)
+    _, df = _matched_terms(ix, dist)
+    assert len(seen) == 1
+    return tuple(d._jdf.queryExecution().executedPlan().toString()
+                 for d in (seen[0], df))
 
 
-def test_distance2_keeps_udf_on_shell_only(ix):
-    _, df = _matched_terms(ix, 2)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+def test_distance1_plan_has_no_python_worker(ix, monkeypatch):
+    for plan in _expansion_plans(ix, 1, monkeypatch):
+        for py in ("ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
+            assert py not in plan, plan
+
+
+def test_distance2_keeps_udf_on_shell_only(ix, monkeypatch):
+    plan, search_plan = _expansion_plans(ix, 2, monkeypatch)
     assert "ArrowEvalPython" in plan or "PythonUDF" in plan
     # the JVM levenshtein bound prunes BELOW the UDF
     assert "levenshtein" in plan
+    # the search itself scans a literal term list: no Python worker
+    assert "ArrowEvalPython" not in search_plan
+    assert "PythonUDF" not in search_plan

@@ -1,0 +1,193 @@
+"""The per-search floor of the API read path.
+
+A catalog handle is opened once per commit and holds the index metadata
+on the driver (n_docs, avgdl per field, the term dictionary), so a
+search compiles to literal-scored plans and runs only the jobs its
+scoring needs plus one pushed doc fetch.  These tests pin:
+
+- both sides of the two size gates (the driver term dictionary and the
+  fuzzy/regex expansion) to bit-identical results, for every DSL shape
+  of the ``search`` benchmark mix;
+- literal scoring against the column-path scorer ``bm25_score``;
+- that the cached handle follows commits (a flushed add, a committed
+  delete);
+- that a warm single-term search runs exactly two Spark jobs.
+"""
+
+import json
+
+import pytest
+from pyspark.sql import functions as F
+
+from toshi_spark.api import ToshiApi
+from toshi_spark.index import catalog as catalog_mod
+from toshi_spark.index.catalog import IndexCatalog
+from toshi_spark.query import compiler as compiler_mod
+from toshi_spark.query.dsl import parse_search
+
+SCHEMA = [
+    {"name": "url", "type": "text",
+     "options": {"indexing": {"record": "basic", "tokenizer": "raw"},
+                 "stored": True}},
+    {"name": "text", "type": "text",
+     "options": {"indexing": {"record": "position",
+                              "tokenizer": "default"},
+                 "stored": False}},
+    {"name": "ts", "type": "u64",
+     "options": {"indexed": True, "stored": True, "fast": True}},
+    {"name": "site", "type": "facet", "options": {"stored": True}},
+]
+
+# one body per DSL shape of the search benchmark's mix; the fuzzy and
+# regex expansions each hold more than one term
+BODIES = [
+    {"query": {"term": {"text": "w1"}}, "limit": 10},
+    {"query": {"term": {"text": "w13"}}, "limit": 10},
+    {"query": {"bool": {"must": [{"term": {"text": "w1"}}],
+                        "should": [{"term": {"text": "w12"}},
+                                   {"term": {"text": "w5"}},
+                                   {"term": {"text": "w5"}}],
+                        "must_not": [{"term": {"text": "w4"}}]}},
+     "limit": 10},
+    {"query": {"phrase": {"text": {"terms": ["w2", "w3"]}}}, "limit": 10},
+    {"query": {"fuzzy": {"text": {"value": "w12", "distance": 1}}},
+     "limit": 10},
+    {"query": {"regex": {"text": "w1[0-9]"}}, "limit": 10},
+    {"query": {"range": {"ts": {"gte": 20, "lt": 60}}}, "limit": 10},
+    {"query": {"raw": "text:w1 AND text:w12"}, "limit": 10},
+    {"query": {"term": {"text": "w12"}}, "sort_by": "ts", "limit": 10},
+    {"query": {"term": {"text": "w1"}}, "facets": {"site": ["/test"]},
+     "limit": 10},
+]
+
+
+def _doc(i: int) -> dict:
+    words = [f"w{i % k}" for k in (2, 3, 5, 7, 11, 13, 17, 19)]
+    return {"url": f"https://s{i % 4}.test/p/{i}",
+            "text": " ".join(words + words[:i % 4]),
+            "ts": i, "site": f"/test/s{i % 4}"}
+
+
+@pytest.fixture(scope="module")
+def base(spark, tmp_path_factory):
+    """A committed 120-doc index built through the API, in two flushes
+    (two segments, so df sums across segments)."""
+    path = str(tmp_path_factory.mktemp("floor"))
+    api = ToshiApi(IndexCatalog(spark, path))
+    assert api.handle("PUT", "/fx/_create", SCHEMA)[0] == 201
+    for lo in (0, 60):
+        body = "".join(json.dumps(_doc(i)) + "\n"
+                       for i in range(lo, lo + 60))
+        assert api.handle("POST", "/fx/_bulk", body)[0] == 201
+        assert api.handle("GET", "/fx/_flush")[0] == 200
+    return path
+
+
+def _run(spark, base: str) -> tuple[list, dict, list]:
+    """(doc_id, score) rows of each body's top-k, the gates the term
+    dictionary and the expansions took, and each API response."""
+    cat = IndexCatalog(spark, base)
+    api = ToshiApi(cat)
+    ranks, gates, responses = [], {}, []
+    for body in BODIES:
+        ix = cat.open("fx")
+        ranks.append([(r["doc_id"], r["score"])
+                      for r in ix.rank_df(parse_search(body)).collect()])
+        for k, v in ix.gates.items():
+            gates.setdefault(k, set()).add(v)
+        st, resp = api.handle("POST", "/fx", body)
+        assert st == 200, resp
+        responses.append(resp)
+    return ranks, gates, responses
+
+
+def test_both_gate_branches_agree_bitwise(spark, base, monkeypatch):
+    ranks, gates, responses = _run(spark, base)
+    assert gates == {"term_dict": {"driver"}, "expansion": {"literal"}}
+    # every shape returns hits, so the comparison is not vacuous
+    assert all(ranks), [len(r) for r in ranks]
+    assert responses[-1]["facets"]
+
+    monkeypatch.setattr(catalog_mod, "TERM_DICT_MAX_ROWS", 1)
+    monkeypatch.setattr(compiler_mod, "EXPANSION_MAX_TERMS", 1)
+    ranks2, gates2, responses2 = _run(spark, base)
+    assert gates2 == {"term_dict": {"collect"},
+                      "expansion": {"semi_join"}}
+    # == on Python floats is bitwise equality of the doubles
+    assert ranks2 == ranks
+    assert responses2 == responses
+
+
+def test_expansion_byte_bound_takes_the_semi_join(spark, base, monkeypatch):
+    monkeypatch.setattr(compiler_mod, "EXPANSION_MAX_BYTES", 4)
+    ix = IndexCatalog(spark, base).open("fx")
+    rows = ix.rank_df(parse_search(BODIES[5])).collect()
+    assert ix.gates["expansion"] == "semi_join"
+    assert len(rows) == 10
+
+
+def test_compile_term_equals_bm25_score(spark, base):
+    from toshi_spark.query.compiler import Compiler
+    from toshi_spark.query.dsl import ExactTerm
+    from toshi_spark.scoring import bm25_score
+
+    ix = IndexCatalog(spark, base).open("fx")
+    for term in ("w1", "w12", "w16"):
+        got = Compiler(ix).compile_term(ExactTerm("text", term))
+        matched = ix.postings.filter(
+            (F.col("field") == "text") & (F.col("term") == term)
+        ).select("field", "term", "doc_id", "tf", "doc_len")
+        want = bm25_score(matched, ix.doclens, ix.termstats, ix.n_docs,
+                          ix.fieldstats, tf_mode="basic",
+                          unique_doc_terms=True)
+        got_rows = sorted((r["doc_id"], r["score"]) for r in got.collect())
+        want_rows = sorted((r["doc_id"], r["score"])
+                           for r in want.collect())
+        assert got_rows and got_rows == want_rows, term
+
+
+def _urls(api, term: str) -> list[str]:
+    st, resp = api.handle("POST", "/fx2",
+                          {"query": {"term": {"text": term}}, "limit": 10})
+    assert st == 200, resp
+    return [d["doc"]["url"] for d in resp["docs"]]
+
+
+def test_cached_handle_follows_commits(spark, tmp_path):
+    cat = IndexCatalog(spark, str(tmp_path))
+    api = ToshiApi(cat)
+    assert api.handle("PUT", "/fx2/_create", SCHEMA)[0] == 201
+    body = "".join(json.dumps(_doc(i)) + "\n" for i in range(20))
+    api.handle("POST", "/fx2/_bulk", body)
+    api.handle("GET", "/fx2/_flush")
+    assert _urls(api, "freshterm") == []
+    ix = cat.open("fx2")
+    assert cat.open("fx2") is ix, "one open per commit"
+
+    new = dict(_doc(99), text="freshterm w1")
+    api.handle("POST", "/fx2/_bulk", json.dumps(new) + "\n")
+    assert _urls(api, "freshterm") == [], "not visible before the flush"
+    api.handle("GET", "/fx2/_flush")
+    assert _urls(api, "freshterm") == [new["url"]]
+
+    st, resp = api.handle("DELETE", "/fx2",
+                          {"terms": {"text": "freshterm"},
+                           "options": {"commit": True}})
+    assert st == 200 and resp["docs_affected"] == 1
+    assert _urls(api, "freshterm") == []
+    assert cat.open("fx2") is not ix
+
+
+def test_warm_single_term_search_runs_two_jobs(spark, base):
+    api = ToshiApi(IndexCatalog(spark, base))
+    body = {"query": {"term": {"text": "w12"}}, "limit": 10}
+    assert api.handle("POST", "/fx", body)[0] == 200  # opens the handle
+    sc = spark.sparkContext
+    sc.setJobGroup("search_floor", "search_floor")
+    try:
+        st, resp = api.handle("POST", "/fx", body)
+    finally:
+        sc.setJobGroup("after_search_floor", "")
+    assert st == 200 and len(resp["docs"]) == 10
+    # the ranking job and the doc fetch; no open, no broadcast
+    assert len(sc.statusTracker().getJobIdsForGroup("search_floor")) == 2

@@ -6,8 +6,13 @@ optional sorted-top-k, optional facet counter), lower the DSL to an
 executable query, run, fetch stored docs, assemble SearchResults.
 
 Lifecycle mapping (SURVEY.md §3.1): JSON DSL → dataclass tree (IR #1)
-→ DataFrame program (IR #2 = Catalyst logical plan) → Catalyst
-optimizes → distributed execute → driver-side top-k merge & doc fetch.
+→ DataFrame program (IR #2 = Catalyst logical plan) over the handle's
+driver-held metadata (n_docs, avgdl per field, term df) → Catalyst
+optimizes → distributed execute → the top-k (doc_id, score) rows come
+to the driver → one pushed ``doc_id IN (…)`` scan of the row store
+fetches their stored fields → the k rows are ordered on the driver.
+A handle is opened once per commit (``IndexCatalog.open``), as Toshi
+opens a reader once per commit.
 """
 
 from __future__ import annotations
@@ -86,6 +91,13 @@ class FullTextIndex:
         # frames build() persist()ed (index tables + row store), so an
         # owner can release them
         self.persisted = list(tables.persisted)
+        # the committed term dictionary {(field, term): df}, set by the
+        # catalog when it is within its row bound; None → each query
+        # collects its own terms' rows of termstats
+        self.term_dict: dict[tuple[str, str], int] | None = None
+        # which side of each size gate the last compile took:
+        # "term_dict" → driver|collect, "expansion" → literal|semi_join
+        self.gates: dict[str, str] = {}
 
     # convenience accessors used by the compiler
     @property
@@ -107,6 +119,22 @@ class FullTextIndex:
     @property
     def n_docs(self) -> int:
         return self.tables.n_docs
+
+    def avgdl(self, field: str) -> float:
+        return self.tables.field_avgdl[field]
+
+    def term_df(self, field: str, terms: list[str]) -> dict[str, int]:
+        """df of each of ``terms`` in ``field``; terms the dictionary
+        does not hold are left out."""
+        if self.term_dict is not None:
+            self.gates["term_dict"] = "driver"
+            return {t: self.term_dict[(field, t)] for t in terms
+                    if (field, t) in self.term_dict}
+        self.gates["term_dict"] = "collect"
+        rows = self.termstats.filter(
+            (F.col("field") == field) & F.col("term").isin(list(terms))
+        ).select("term", "df").collect()
+        return {r["term"]: int(r["df"]) for r in rows}
 
     def enable_doc_bucketed(
         self,
@@ -170,24 +198,18 @@ class FullTextIndex:
 
     # ------------------------------------------------------------- search
 
-    def search_df(self, search: Search,
-                  scored: DataFrame | None = None) -> DataFrame:
-        """Compile + rank; returns (score, doc_id, <stored fields>) DF.
-
-        Ordering/limit are applied; the DataFrame is collect-ready but
-        still lazy (used directly by the driver-contract ``queries()``).
-        ``scored`` optionally supplies an already-compiled (doc_id,
-        score) set — ``search()`` shares one compile between the top-k
-        and the facet collector.
-        """
+    def rank_df(self, search: Search,
+                scored: DataFrame | None = None) -> DataFrame:
+        """Compile + rank; returns the lazy top-k (score, doc_id) frame,
+        ordered score desc, doc_id asc.  ``scored`` optionally supplies
+        an already-compiled (doc_id, score) set — ``search()`` shares
+        one compile between the top-k and the facet collector."""
         if search.query is None:
             raise QueryError("Empty Query Provided")  # handle.rs:158-160
         if scored is None:
             search.query.validate()
             scored = Compiler(self).compile(search.query)
-
         sort_spec = self.schema.get(search.sort_by) if search.sort_by else None
-        corpus = self.corpus.alias("c")
         if (
             sort_spec is not None
             and sort_spec.fast
@@ -196,36 +218,55 @@ class FullTextIndex:
         ):
             # top-k by fast field: returned "score" IS the field value
             # (handle.rs:82-92,127-134); silent fallback otherwise.
-            ranked = (
+            scored = (
                 scored.select("doc_id")
                 .alias("s")
-                .join(corpus, F.col("s.doc_id") == F.col(f"c.{self.id_col}"))
+                .join(self.corpus.alias("c"),
+                      F.col("s.doc_id") == F.col(f"c.{self.id_col}"))
                 .select(
                     F.col(f"c.{sort_spec.name}").cast("double").alias("score"),
                     F.col("s.doc_id").alias("doc_id"),
                 )
-                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(search.limit)
             )
-        else:
-            ranked = scored.orderBy(
-                F.col("score").desc(), F.col("doc_id").asc()
-            ).limit(search.limit)
-        # doc fetch: k rows vs row store → broadcast the k winners
-        # (handle.rs:127-144 doc-fetch join)
+        return scored.select("score", "doc_id").orderBy(
+            F.col("score").desc(), F.col("doc_id").asc()
+        ).limit(search.limit)
+
+    def _stored_names(self) -> list[str]:
+        return [f.name for f in self.schema.fields if f.stored]
+
+    def search_df(self, search: Search,
+                  scored: DataFrame | None = None) -> DataFrame:
+        """``rank_df`` joined to the row store; returns (score, doc_id,
+        <stored fields>), ordered and limited, still lazy (used
+        directly by the driver-contract ``queries()``)."""
+        ranked = self.rank_df(search, scored=scored)
+        corpus = self.corpus.alias("c")
         fetched = F.broadcast(ranked.alias("r")).join(
             corpus, F.col("r.doc_id") == F.col(f"c.{self.id_col}")
         )
-        stored_cols = [
-            F.col(f"c.{f.name}").alias(f.name)
-            for f in self.schema.fields
-            if f.stored
-        ]
         return fetched.select(
             F.col("r.score").alias("score"),
             F.col("r.doc_id").alias("doc_id"),
-            *stored_cols,
+            *[F.col(f"c.{n}").alias(n) for n in self._stored_names()],
         ).orderBy(F.col("score").desc(), F.col("doc_id").asc())
+
+    def fetch(self, top: list) -> list[tuple[float, int, Any]]:
+        """Stored fields of the top-k ``(score, doc_id)`` rows in ONE
+        pushed ``doc_id IN (…)`` scan of the row store; returns
+        (score, doc_id, row) ordered score desc, doc_id asc.  A doc the
+        row store lacks drops out, as it would from a join."""
+        if not top:
+            return []
+        score = {r["doc_id"]: r["score"] for r in top}
+        rows = self.corpus.filter(
+            F.col(self.id_col).isin(list(score))
+        ).select(
+            F.col(self.id_col).cast("long").alias("__doc_id"),
+            *[F.col(n) for n in self._stored_names()],
+        ).collect()
+        hits = [(score[r["__doc_id"]], r["__doc_id"], r) for r in rows]
+        return sorted(hits, key=lambda h: (-h[0], h[1]))
 
     def facet_counts(self, search: Search,
                      scored: DataFrame | None = None) -> list[dict[str, Any]]:
@@ -279,8 +320,7 @@ class FullTextIndex:
             search.query.validate()
             scored = Compiler(self).compile(search.query).persist()
         try:
-            df = self.search_df(search, scored=scored)
-            rows = df.collect()
+            top = self.rank_df(search, scored=scored).collect()
             facets = (
                 self.facet_counts(search, scored=scored)
                 if search.facets else []
@@ -288,7 +328,6 @@ class FullTextIndex:
         finally:
             if scored is not None:
                 scored.unpersist()
-        stored_names = [f.name for f in self.schema.fields if f.stored]
 
         def render(v):
             # FlatNamedDocument (toshi-types/src/query/mod.rs:322-338):
@@ -299,11 +338,9 @@ class FullTextIndex:
             return v
 
         docs = [
-            ScoredDoc(
-                score=float(r["score"]),
-                doc={n: render(r[n]) for n in stored_names},
-            )
-            for r in rows
+            ScoredDoc(score=float(score),
+                      doc={n: render(r[n]) for n in self._stored_names()})
+            for score, _doc_id, r in self.fetch(top)
         ]
         return SearchResults(hits=len(docs), docs=docs, facets=facets)
 

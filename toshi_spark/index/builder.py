@@ -24,6 +24,7 @@ cheap re-aggregation (scores are additive per doc).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -36,22 +37,33 @@ class IndexTables:
 
     BM25 length normalization is per field, so doclens/fieldstats carry
     a ``field`` column (a doc has one length per indexed text field).
+    avgdl per field is driver-held metadata (``field_avgdl``); the
+    ``fieldstats`` frame is derived from it for the column-path scorers
+    (``scoring.bm25_score``, ``query.blockmax``).
     """
 
     postings: DataFrame  # field, term, doc_id, tf, positions
     doclens: DataFrame  # field, doc_id, doc_len
     termstats: DataFrame  # field, term, df
-    fieldstats: DataFrame  # field, avgdl
+    field_avgdl: dict[str, float]  # field → avgdl
     n_docs: int
     # the frames build_index persist()ed, so an owner can release them
     persisted: list[DataFrame] = field(default_factory=list)
 
+    @cached_property
+    def fieldstats(self) -> DataFrame:
+        """(field, avgdl) as a local relation: no Spark job."""
+        return self.doclens.sparkSession.createDataFrame(
+            sorted(self.field_avgdl.items()), "field string, avgdl double"
+        )
+
     @property
     def avgdl(self) -> float:
         """Single-field convenience: the one field's avgdl."""
-        rows = self.fieldstats.collect()
-        assert len(rows) == 1, "avgdl property is for single-field indexes"
-        return float(rows[0]["avgdl"])
+        assert len(self.field_avgdl) == 1, (
+            "avgdl property is for single-field indexes"
+        )
+        return next(iter(self.field_avgdl.values()))
 
 
 def analyze_corpus(
@@ -158,19 +170,17 @@ def build_index(
         persisted.append(termstats)
     # ONE metadata job computes avgdl AND n_docs (doclens has exactly
     # one row per (field, doc) including empty-doc sentinels, so the
-    # per-field row count IS the doc count): fieldstats becomes a
-    # literal local relation — every query broadcasts metadata instead
-    # of re-aggregating, and the build pays a single stats pass.
+    # per-field row count IS the doc count): both are driver-held
+    # metadata, so queries read them as literals and the build pays a
+    # single stats pass.
     # avgdl from EXACT lengths, before any quantization (see docstring)
-    spark = corpus.sparkSession
     stats_rows = doclens.groupBy("field").agg(
         F.avg("doc_len").alias("avgdl"), F.count("*").alias("n")
     ).collect()
     n_docs = max((r["n"] for r in stats_rows), default=0)
-    fieldstats = spark.createDataFrame(
-        [(r["field"], float(r["avgdl"])) for r in stats_rows]
-        or [(tf, 0.0) for tf in text_fields],  # empty corpus: avgdl 0
-        "field string, avgdl double",
+    field_avgdl = (
+        {r["field"]: float(r["avgdl"]) for r in stats_rows}
+        or {tf: 0.0 for tf in text_fields}  # empty corpus: avgdl 0
     )
     if quantize_fieldnorms:
         import pandas as pd
@@ -190,7 +200,7 @@ def build_index(
         postings=postings,
         doclens=doclens,
         termstats=termstats,
-        fieldstats=fieldstats,
+        field_avgdl=field_avgdl,
         n_docs=n_docs,
         persisted=persisted,
     )

@@ -96,9 +96,12 @@ def run_merge(
         termstats = (
             postings.groupBy("field", "term").agg(F.count("*").alias("df"))
         )
-        fieldstats = doclens.groupBy("field").agg(
-            F.avg("doc_len").alias("avgdl")
-        )
+        field_avgdl = {
+            r["field"]: float(r["avgdl"])
+            for r in doclens.groupBy("field").agg(
+                F.avg("doc_len").alias("avgdl")
+            ).collect()
+        }
         n_docs = (
             doclens.select("doc_id").distinct().count()
             if tomb is not None
@@ -106,7 +109,7 @@ def run_merge(
         )
         tables = IndexTables(
             postings=postings, doclens=doclens, termstats=termstats,
-            fieldstats=fieldstats, n_docs=n_docs,
+            field_avgdl=field_avgdl, n_docs=n_docs,
         )
         new_id = segment_id_for(
             index_name, "merge:" + "+".join(sorted(e.segment_id for e in bucket)),

@@ -18,8 +18,10 @@ Spark mapping:
 - resume = segment ids are content-addressed (index name + chunk id +
   input fingerprint), so a re-run skips chunks already in the manifest
   (north rule: builds resume from the last committed segment)
-- per-partition lineage: each segment records per-output-partition
-  docs/terms/postings/bytes in ``_metrics.jsonl``
+- per-partition lineage: each segment records the postings row count
+  of each written postings part file in ``_metrics.jsonl`` (read from
+  the file's parquet footer, no Spark job); docs/terms/bytes are
+  per segment, in the manifest entry
 """
 
 from __future__ import annotations
@@ -32,6 +34,7 @@ import shutil
 import time
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -165,13 +168,18 @@ def _recreatable_stale_ids(
     return ids
 
 
-def _parquet_rows(path: str) -> int:
-    """Row count of a parquet table directory, read from the footers of
-    its files on the driver (no Spark job)."""
-    return sum(
+def _part_rows(path: str) -> list[int]:
+    """Row count of each part file of a parquet table directory, read
+    from the footers on the driver (no Spark job)."""
+    return [
         pq.ParquetFile(f).metadata.num_rows
-        for f in glob.glob(os.path.join(path, "*.parquet"))
-    )
+        for f in sorted(glob.glob(os.path.join(path, "*.parquet")))
+    ]
+
+
+def _parquet_rows(path: str) -> int:
+    """Row count of a parquet table directory (footers, no Spark job)."""
+    return sum(_part_rows(path))
 
 
 def _dir_bytes(path: str) -> int:
@@ -226,9 +234,6 @@ def write_segment(
         .parquet(f"{staging}/postings")
     )
 
-    fieldstats = {
-        r["field"]: float(r["avgdl"]) for r in tables.fieldstats.collect()
-    }
     tables.doclens.write.mode("overwrite").parquet(f"{staging}/doclens")
     # dictionary sorted by (field, term): parquet min/max stats give
     # prefix-range pruning for regex/fuzzy dictionary scans
@@ -247,39 +252,20 @@ def write_segment(
         df.unpersist()
 
     n_terms = _parquet_rows(f"{staging}/termstats")
-    n_postings = _parquet_rows(f"{staging}/postings")
+    part_postings = _part_rows(f"{staging}/postings")
+    n_postings = sum(part_postings)
     with open(f"{staging}/stats.json", "w") as f:
         json.dump(
-            {"n_docs": tables.n_docs, "fieldstats": fieldstats,
+            {"n_docs": tables.n_docs, "fieldstats": tables.field_avgdl,
              "n_terms": n_terms, "n_postings": n_postings},
             f,
         )
 
-    # per-partition lineage metrics over the written postings layout
-    metrics = (
-        spark.read.parquet(f"{staging}/postings")
-        .groupBy(F.spark_partition_id().alias("partition"))
-        .agg(
-            F.count("*").alias("postings"),
-            F.approx_count_distinct("term").alias("terms"),
-            F.approx_count_distinct("doc_id").alias("docs"),
-        )
-        .collect()
-    )
+    # per-partition lineage: one line per non-empty postings part file
     with open(f"{staging}/_metrics.jsonl", "w") as f:
-        for r in metrics:
-            f.write(
-                json.dumps(
-                    {
-                        "segment_id": segment_id,
-                        "partition": r["partition"],
-                        "postings": r["postings"],
-                        "terms": r["terms"],
-                        "docs": r["docs"],
-                    }
-                )
-                + "\n"
-            )
+        for i, n in enumerate(n for n in part_postings if n):
+            f.write(json.dumps({"segment_id": segment_id, "partition": i,
+                                "postings": n}) + "\n")
 
     seg_bytes = _dir_bytes(staging)
     if os.path.exists(seg_dir):
@@ -449,14 +435,17 @@ def migrate_stale_segments(
         termstats = postings.groupBy("field", "term").agg(
             F.count("*").alias("df")
         )
-        fieldstats = doclens.groupBy("field").agg(
-            F.avg("doc_len").alias("avgdl")
-        )
+        field_avgdl = {
+            r["field"]: float(r["avgdl"])
+            for r in doclens.groupBy("field").agg(
+                F.avg("doc_len").alias("avgdl")
+            ).collect()
+        }
         tables = IndexTables(
             postings=postings,
             doclens=doclens,
             termstats=termstats,
-            fieldstats=fieldstats,
+            field_avgdl=field_avgdl,
             n_docs=e.docs,
         )
         new_id = segment_id_for(
@@ -539,7 +528,7 @@ def open_segmented_tables(spark: SparkSession, index_dir: str) -> IndexTables:
     Readers consult ONLY the manifest (write/read isolation: a crashed
     or in-flight build's staging dirs are invisible).  Stats are
     re-aggregated across segments: df and doclens add; avgdl is the
-    doc-weighted mean.
+    doc-weighted mean, held on the driver.
     """
     seg_dirs = _segment_dirs(index_dir)
     postings = spark.read.schema(POSTINGS_READ_SCHEMA).parquet(
@@ -559,7 +548,7 @@ def open_segmented_tables(spark: SparkSession, index_dir: str) -> IndexTables:
     # stitched avgdl = doc-weighted mean of per-segment avgdl — pure
     # metadata from stats.json (every doc contributes one doclens row
     # per indexed field, so segment n_docs is the right weight); no
-    # Spark job, and queries broadcast a literal local relation
+    # Spark job, and queries read it as a literal
     fsum: dict[str, float] = {}
     fw: dict[str, int] = {}
     for d in seg_dirs:
@@ -569,25 +558,39 @@ def open_segmented_tables(spark: SparkSession, index_dir: str) -> IndexTables:
         for fld, avgdl in st.get("fieldstats", {}).items():
             fsum[fld] = fsum.get(fld, 0.0) + float(avgdl) * st["n_docs"]
             fw[fld] = fw.get(fld, 0) + st["n_docs"]
-    rows = [
-        (fld, fsum[fld] / fw[fld] if fw[fld] else 0.0)
-        for fld in sorted(fsum)  # zero-weight: only empty segments
-    ]
-    if rows:
-        fieldstats = spark.createDataFrame(
-            rows, "field string, avgdl double"
-        )
-    else:
-        fieldstats = doclens.groupBy("field").agg(
-            F.avg("doc_len").alias("avgdl")
-        )
+    field_avgdl = {
+        fld: fsum[fld] / fw[fld] if fw[fld] else 0.0  # 0: empty segments
+        for fld in sorted(fsum)
+    }
     return IndexTables(
         postings=postings,
         doclens=doclens,
         termstats=termstats,
-        fieldstats=fieldstats,
+        field_avgdl=field_avgdl,
         n_docs=n_docs,
     )
+
+
+def read_term_dict(index_dir: str,
+                   max_rows: int) -> dict[tuple[str, str], int] | None:
+    """The committed term dictionary as ``{(field, term): df}``, read on
+    the driver with pyarrow (no Spark job), or None when the segments'
+    termstats hold more than ``max_rows`` rows (summed over the parquet
+    footers, so checking the bound reads no data)."""
+    paths = [f"{d}/termstats" for d in _segment_dirs(index_dir)]
+    if sum(_parquet_rows(p) for p in paths) > max_rows:
+        return None
+    files = [f for p in paths
+             for f in sorted(glob.glob(os.path.join(p, "*.parquet")))]
+    if not files:
+        return {}
+    ts = pa.concat_tables(
+        [pq.read_table(f, columns=["field", "term", "df"]) for f in files]
+    ).group_by(["field", "term"]).aggregate([("df", "sum")])
+    return dict(zip(
+        zip(ts["field"].to_pylist(), ts["term"].to_pylist()),
+        ts["df_sum"].to_pylist(),
+    ))
 
 
 def _segment_dirs(index_dir: str) -> list[str]:
@@ -620,8 +623,7 @@ def open_blocks(spark: SparkSession, index_dir: str) -> DataFrame:
     """Block table (``index.blocks``) of the committed segments, encoded
     from their stored postings and salts at the stitched avgdl of
     ``open_segmented_tables`` — the avgdl the blocks are queried with."""
-    fieldstats = open_segmented_tables(spark, index_dir).fieldstats
-    avgdl = {r["field"]: float(r["avgdl"]) for r in fieldstats.collect()}
+    avgdl = open_segmented_tables(spark, index_dir).field_avgdl
     postings = spark.read.schema(POSTINGS_READ_SCHEMA).parquet(
         *[f"{d}/postings" for d in _segment_dirs(index_dir)]
     )

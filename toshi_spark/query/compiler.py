@@ -3,9 +3,20 @@
 The reference lowers its DSL 1:1 to Tantivy query objects
 (``toshi-server/src/handle.rs:107-121``); all physical smarts live in
 the library.  Here the lowering target is a Catalyst logical plan over
-the index tables, and the physical smarts are Catalyst's: the postings
-filter pushes down to the parquet scan, posting-list intersection is a
-join on doc_id, union is union+groupBy-sum, difference is left_anti.
+the postings table, and the physical smarts are Catalyst's: the
+postings filter pushes down to the parquet scan, posting-list
+intersection is a join on doc_id, union is union+groupBy-sum,
+difference is left_anti.
+
+Index metadata is resolved on the driver before the plan is built, as
+Toshi's reader resolves it from the segment's term dictionary: n_docs
+and avgdl come from the handle, each query term's df from
+``ctx.term_df``, and all of them enter the plan as literals (Catalyst
+folds each term's idf to one constant).  So a term query is one pushed
+postings scan, and no metadata table is joined or broadcast.  Fuzzy
+and regex expansions run as a Spark job over the term dictionary; a
+bounded expansion becomes a literal ``term IN (…)`` on the postings
+scan, a larger one a semi-join that AQE plans.
 
 Scoring semantics pinned per clause type (SURVEY.md §2.2):
 
@@ -28,13 +39,16 @@ score: double).
 
 from __future__ import annotations
 
+from collections import Counter
 from functools import reduce
+from operator import add
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..scoring import bm25_score, idf_col, tf_norm_dyn
 from ..schema import QueryError
+from ..scoring import idf_col, tf_norm_dyn
+from ..session import bounded_collect
 from .dsl import (
     AllQuery,
     BoolQuery,
@@ -48,12 +62,17 @@ from .dsl import (
     RegexQuery,
 )
 
+# a fuzzy/regex expansion at or under both bounds becomes a literal
+# ``term IN (…)`` on the postings scan; a larger one is a semi-join
+EXPANSION_MAX_TERMS = 1024
+EXPANSION_MAX_BYTES = 1 << 20
+
 
 class Compiler:
     """Compiles DSL nodes against one index's tables.
 
     ``ctx`` is the engine (FullTextIndex): postings, doclens, termstats,
-    fieldstats, n_docs, corpus, schema.
+    n_docs, avgdl(field), term_df(field, terms), gates, corpus, schema.
     """
 
     def __init__(self, ctx):
@@ -78,28 +97,45 @@ class Compiler:
             tcond = F.col("term").isin(terms)
         return p.filter(cond & tcond)
 
+    def _empty(self) -> DataFrame:
+        return self.ctx.spark.createDataFrame([], "doc_id long, score double")
+
+    def _with_doc_len(self, p: DataFrame) -> DataFrame:
+        if "doc_len" in p.columns:  # inline fieldnorm: no doclens join
+            return p
+        return p.join(self.ctx.doclens, ["field", "doc_id"])
+
+    def _bm25(self, field: str, dfs: dict[str, int], tf: Column) -> Column:
+        """Per-posting BM25 over literal metadata: each term's idf is a
+        constant expression Catalyst folds with the column path's
+        arithmetic (a CASE over ``term`` when there are several)."""
+        idfs = [(t, idf_col(self.ctx.n_docs, F.lit(df).cast("double")))
+                for t, df in sorted(dfs.items())]
+        idf = idfs[0][1] if len(idfs) == 1 else _by_term(idfs)
+        return idf * tf_norm_dyn(tf, F.col("doc_len").cast("double"),
+                                 F.lit(self.ctx.avgdl(field)))
+
     def compile_term(self, q: ExactTerm) -> DataFrame:
         self.ctx.schema.require_indexed(q.field)
         # query value used verbatim (Term::from_field_text, mod.rs:221)
-        p = self._postings_for_terms(q.field, [q.value])
-        cols = ["field", "term", "doc_id", "tf"]
-        if "doc_len" in p.columns:  # inline fieldnorm: no doclens join
-            cols.append("doc_len")
-        matched = p.select(*cols)
-        return bm25_score(
-            matched,
-            self.ctx.doclens,
-            self.ctx.termstats,
-            self.ctx.n_docs,
-            self.ctx.fieldstats,
-            tf_mode="basic",
-            unique_doc_terms=True,  # one posting row per doc: no agg
+        dfs = self.ctx.term_df(q.field, [q.value])
+        if not dfs:
+            return self._empty()
+        # Basic record option: tf treated as 1; one posting row per doc,
+        # so no aggregation
+        p = self._with_doc_len(self._postings_for_terms(q.field, [q.value]))
+        return p.select(
+            "doc_id", self._bm25(q.field, dfs, F.lit(1.0)).alias("score")
         )
 
     def compile_phrase(self, q: PhraseQuery) -> DataFrame:
         q.validate()
         self.ctx.schema.require_indexed(q.field)
         offsets = q.offsets if q.offsets is not None else list(range(len(q.terms)))
+        counts = Counter(q.terms)
+        dfs = self.ctx.term_df(q.field, list(counts))
+        if len(dfs) < len(counts):
+            return self._empty()  # a term no doc holds: no match
         has_inline_len = "doc_len" in self.ctx.postings.columns
         # ONE pushed scan over the phrase's distinct terms + ONE shuffle
         # (groupBy doc_id → term→positions map).  The previous plan
@@ -153,41 +189,19 @@ class Compiler:
         )
         # Phrase scoring: Tantivy's PhraseQuery uses a multi-term BM25
         # weight — idf summed over the phrase terms (with multiplicity),
-        # tf = phrase frequency.  idf_sum is a 1-row aggregate over the
-        # term dictionary → lazy broadcast cross join, no driver action.
-        from collections import Counter
-
-        counts = Counter(q.terms)
-        weights = self.ctx.spark.createDataFrame(
-            [(t, float(c)) for t, c in counts.items()], "term string, w double"
-        )
-        ts = self.ctx.termstats.filter(
-            (F.col("field") == q.field) & F.col("term").isin(list(counts))
-        )
-        idf_total = (
-            ts.join(F.broadcast(weights), "term")
-            .agg(
-                F.coalesce(
-                    F.sum(idf_col(self.ctx.n_docs, F.col("df").cast("double"))
-                          * F.col("w")),
-                    F.lit(0.0),
-                ).alias("idf_sum")
-            )
-        )
-        if not has_inline_len:
-            matched = matched.join(self.ctx.doclens, ["field", "doc_id"])
-        scored = (
-            matched.join(F.broadcast(self.ctx.fieldstats), "field")
-            .crossJoin(F.broadcast(idf_total))
-            .withColumn(
-                "score",
-                F.col("idf_sum")
-                * tf_norm_dyn(
-                    F.col("tf").cast("double"),
-                    F.col("doc_len").cast("double"),
-                    F.col("avgdl"),
-                ),
-            )
+        # tf = phrase frequency; the sum is a constant expression
+        idf_sum = reduce(add, [
+            idf_col(self.ctx.n_docs, F.lit(dfs[t]).cast("double"))
+            * F.lit(float(c))
+            for t, c in sorted(counts.items())
+        ])
+        scored = self._with_doc_len(matched).withColumn(
+            "score",
+            idf_sum * tf_norm_dyn(
+                F.col("tf").cast("double"),
+                F.col("doc_len").cast("double"),
+                F.lit(self.ctx.avgdl(q.field)),
+            ),
         )
         return scored.select("doc_id", "score")
 
@@ -196,11 +210,27 @@ class Compiler:
         d = self.ctx.termstats.filter(F.col("field") == field).filter(term_pred)
         return d.select("field", "term")
 
-    def _const_score_for_terms(self, expanded: DataFrame) -> DataFrame:
-        """Automaton-query scoring: every matching doc scores 1.0."""
-        matched = self.ctx.postings.join(
-            F.broadcast(expanded), ["field", "term"], "left_semi"
-        )
+    def _const_score_for_terms(self, field: str,
+                               expanded: DataFrame) -> DataFrame:
+        """Automaton-query scoring: every matching doc scores 1.0.
+
+        A bounded expansion is pushed into the postings scan as a
+        literal term list; above the bounds the postings semi-join the
+        expansion and AQE picks the join strategy."""
+        rows = bounded_collect(expanded.select("term"),
+                               EXPANSION_MAX_TERMS, EXPANSION_MAX_BYTES)
+        if rows is None:
+            self.ctx.gates["expansion"] = "semi_join"
+            matched = self.ctx.postings.join(
+                expanded, ["field", "term"], "left_semi"
+            )
+        else:
+            self.ctx.gates["expansion"] = "literal"
+            if not rows:
+                return self._empty()
+            matched = self._postings_for_terms(
+                field, sorted(r["term"] for r in rows)
+            )
         return matched.select("doc_id").distinct().withColumn(
             "score", F.lit(1.0)
         )
@@ -211,7 +241,7 @@ class Compiler:
             # Levenshtein distance 0 ≡ exact term: the equality pushes
             # all the way to the parquet scan (no dictionary sweep)
             return self._const_score_for_terms(
-                self._expand_dict(q.field, F.col("term") == q.value)
+                q.field, self._expand_dict(q.field, F.col("term") == q.value)
             )
         # cheap columnar prefilter: |len(term) − len(value)| ≤ d holds
         # for every term within edit distance d — prunes the dictionary
@@ -264,7 +294,7 @@ class Compiler:
             expanded = candidates.filter(
                 (lev <= dist) | within(F.col("term"))
             )
-        return self._const_score_for_terms(expanded)
+        return self._const_score_for_terms(q.field, expanded)
 
     def compile_regex(self, q: RegexQuery) -> DataFrame:
         q.validate()
@@ -281,7 +311,9 @@ class Compiler:
             if ord(last) < 0x10FFFF:
                 upper = prefix[:-1] + chr(ord(last) + 1)
                 pred = (F.col("term") < upper) & pred
-        return self._const_score_for_terms(self._expand_dict(q.field, pred))
+        return self._const_score_for_terms(
+            q.field, self._expand_dict(q.field, pred)
+        )
 
     def compile_range(self, q: RangeQuery) -> DataFrame:
         spec = self.ctx.schema.require_indexed(q.field)
@@ -313,14 +345,14 @@ class Compiler:
         query is ONE postings scan + ONE aggregation:
 
             filter term ∈ all-clause-terms
-            → per-(doc,term) basic BM25 part
-            → broadcast-join a tiny (term, weight, is_must, is_not) map
+            → per-(doc,term) basic BM25 part (literal idf per term)
             → groupBy(doc): score = Σ weight·part,
               matched-must distinct count, must_not flag
             → filter must-complete ∧ ¬must_not
 
-        Semantics identical to the clause-by-clause plan (weights carry
-        clause multiplicity).  Returns None when the shape doesn't
+        The weights (clause multiplicity) and the must/not/should flags
+        are CASE/IN literals over ``term``.  Semantics identical to the
+        clause-by-clause plan.  Returns None when the shape doesn't
         apply (mixed clause types / multiple fields).
         """
         clauses = [*q.must, *q.must_not, *q.should]
@@ -332,64 +364,36 @@ class Compiler:
         field = next(iter(fields))
         self.ctx.schema.require_indexed(field)
 
-        from collections import Counter
-
         must_c = Counter(c.value for c in q.must)
         should_c = Counter(c.value for c in q.should)
         not_set = {c.value for c in q.must_not}
-        all_terms = sorted(set(must_c) | set(should_c) | not_set)
-        term_meta = self.ctx.spark.createDataFrame(
-            [
-                (
-                    t,
-                    float(must_c.get(t, 0) + should_c.get(t, 0)),
-                    t in must_c,
-                    t in not_set,
-                    t in should_c,
-                )
-                for t in all_terms
-            ],
-            "term string, w double, is_must boolean, is_not boolean, "
-            "is_should boolean",
+        # a term the dictionary lacks has no postings: it contributes
+        # nothing, and a must clause on it matches no doc
+        dfs = self.ctx.term_df(
+            field, sorted(set(must_c) | set(should_c) | not_set)
         )
-        p = self._postings_for_terms(field, all_terms)
-        cols = ["field", "term", "doc_id", "tf"]
-        if "doc_len" in p.columns:
-            cols.append("doc_len")
-        matched = p.select(*cols)
-        # clause-term slice of the dictionary: pushed term-IN scan,
-        # explicitly broadcast (constraint inference would usually get
-        # there, but at 100 TB a silently-shuffled dictionary join is
-        # the failure mode worth pinning)
-        ts = self.ctx.termstats.filter(
-            (F.col("field") == field) & F.col("term").isin(all_terms)
-        ).select("field", "term", "df")
-        joined = matched.join(F.broadcast(ts), ["field", "term"])
-        if "doc_len" not in cols:
-            joined = joined.join(self.ctx.doclens, ["field", "doc_id"])
-        joined = (
-            joined
-            .join(F.broadcast(self.ctx.fieldstats), "field")
-            .join(F.broadcast(term_meta), "term")
-            .withColumn(
-                "part",
-                idf_col(self.ctx.n_docs, F.col("df").cast("double"))
-                * tf_norm_dyn(F.lit(1.0), F.col("doc_len").cast("double"),
-                              F.col("avgdl")),
-            )
-        )
-        agg = joined.groupBy("doc_id").agg(
-            F.sum(F.col("part") * F.col("w")).alias("score"),
-            # posting rows are unique per (term, doc) and term_meta has
-            # one row per term, so a conditional SUM equals the distinct
-            # must-term count — count_distinct here would plan a second
-            # shuffle (two-phase distinct agg), doubling the query's
-            # exchange cost at scale
-            F.sum(
-                F.when(F.col("is_must"), 1).otherwise(0)
-            ).alias("n_must"),
-            F.max(F.when(F.col("is_not"), 1).otherwise(0)).alias("excluded"),
-            F.max(F.when(F.col("is_should"), 1).otherwise(0)).alias("has_should"),
+        if not dfs:
+            return self._empty()
+        term = F.col("term")
+
+        def flag(terms) -> Column:
+            terms = sorted(terms)
+            return F.when(term.isin(terms), 1).otherwise(0) if terms \
+                else F.lit(0)
+
+        w = _by_term([(t, float(must_c[t] + should_c[t]))
+                      for t in sorted(dfs)])
+        p = self._with_doc_len(self._postings_for_terms(field, sorted(dfs)))
+        part = self._bm25(field, dfs, F.lit(1.0))
+        agg = p.groupBy("doc_id").agg(
+            F.sum(part * w).alias("score"),
+            # posting rows are unique per (term, doc), so a conditional
+            # SUM equals the distinct must-term count — count_distinct
+            # here would plan a second shuffle (two-phase distinct agg),
+            # doubling the query's exchange cost at scale
+            F.sum(flag(must_c)).alias("n_must"),
+            F.max(flag(not_set)).alias("excluded"),
+            F.max(flag(should_c)).alias("has_should"),
         )
         cond = F.col("excluded") == 0
         if must_c:
@@ -434,7 +438,7 @@ class Compiler:
 
         if base is None:
             # no positive clause → empty result (Tantivy: no scorer)
-            return self.ctx.spark.createDataFrame([], "doc_id long, score double")
+            return self._empty()
 
         for mn in must_nots:
             base = base.join(mn.select("doc_id"), "doc_id", "left_anti")
@@ -467,6 +471,13 @@ class Compiler:
 
             return self.compile(parse_raw(q.raw, self.ctx.schema))
         raise QueryError(f"Unsupported query type: {type(q).__name__}")
+
+
+def _by_term(pairs: list[tuple[str, Column | float]]) -> Column:
+    """``CASE term WHEN t1 THEN v1 … END`` over literal (term, value)
+    pairs (``F.when`` opens the CASE, ``Column.when`` extends it)."""
+    return reduce(lambda c, tv: c.when(F.col("term") == tv[0], tv[1]),
+                  pairs, F)
 
 
 _REGEX_META = set(".^$*+?{}[]|()\\")

@@ -66,11 +66,13 @@ def bm25_score(
     (field, doc_id) for callers without it; fieldstats (field → avgdl,
     one row per field) → broadcast.  Output: (doc_id, score).
     """
-    # No broadcast hint on termstats: the equi-join on (field, term)
-    # lets Catalyst propagate the matched side's term predicate into the
-    # termstats scan (InferFiltersFromConstraints), and AQE converts the
-    # shrunken side to a broadcast join at runtime.  A static broadcast
-    # hint here would ship the ENTIRE term dictionary.
+    # The column path, for callers holding termstats as a frame (the
+    # API compiler reads df and avgdl from driver-held metadata as
+    # literals instead).  No broadcast hint on termstats: the equi-join
+    # on (field, term) lets Catalyst propagate the matched side's term
+    # predicate into the termstats scan (InferFiltersFromConstraints),
+    # and AQE may turn the shrunken side into a broadcast at runtime.
+    # A static hint here would ship the ENTIRE term dictionary.
     per_term_df = termstats.select("field", "term", "df")
     tf = F.lit(1.0) if tf_mode == "basic" else F.col("tf").cast("double")
     joined = matched.join(per_term_df, ["field", "term"])

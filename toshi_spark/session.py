@@ -12,7 +12,7 @@ import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -85,3 +85,16 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     ship_package(spark)
     return spark
+
+
+def bounded_collect(df: DataFrame, max_rows: int,
+                    max_bytes: int) -> list[Row] | None:
+    """Bring ``df`` to the driver only while it is small: its rows, or
+    None when it has more than ``max_rows`` rows or its values take
+    more than ``max_bytes`` bytes as UTF-8 text.  At most
+    ``max_rows + 1`` rows are ever collected."""
+    rows = df.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        return None
+    size = sum(len(str(v).encode()) for r in rows for v in r)
+    return rows if size <= max_bytes else None
