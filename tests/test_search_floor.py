@@ -3,7 +3,8 @@
 A catalog handle is opened once per commit and holds the index metadata
 on the driver (n_docs, avgdl per field, the term dictionary), so a
 search compiles to literal-scored plans and runs only the jobs its
-scoring needs plus one pushed doc fetch.  These tests pin:
+scoring needs; the winners' stored fields come from the row store on
+the driver (tests/test_doc_store.py).  These tests pin:
 
 - both sides of the two size gates (the driver term dictionary and the
   fuzzy/regex expansion) to bit-identical results, for every DSL shape
@@ -11,7 +12,8 @@ scoring needs plus one pushed doc fetch.  These tests pin:
 - literal scoring against the column-path scorer ``bm25_score``;
 - that the cached handle follows commits (a flushed add, a committed
   delete);
-- that a warm single-term search runs exactly two Spark jobs.
+- that a warm single-term search runs exactly one Spark job, and a
+  faceted search at most four.
 """
 
 import json
@@ -103,7 +105,8 @@ def _run(spark, base: str) -> tuple[list, dict, list]:
 
 def test_both_gate_branches_agree_bitwise(spark, base, monkeypatch):
     ranks, gates, responses = _run(spark, base)
-    assert gates == {"term_dict": {"driver"}, "expansion": {"literal"}}
+    assert gates == {"term_dict": {"driver"}, "expansion": {"literal"},
+                     "fetch": {"driver"}}
     # every shape returns hits, so the comparison is not vacuous
     assert all(ranks), [len(r) for r in ranks]
     assert responses[-1]["facets"]
@@ -112,7 +115,7 @@ def test_both_gate_branches_agree_bitwise(spark, base, monkeypatch):
     monkeypatch.setattr(compiler_mod, "EXPANSION_MAX_TERMS", 1)
     ranks2, gates2, responses2 = _run(spark, base)
     assert gates2 == {"term_dict": {"collect"},
-                      "expansion": {"semi_join"}}
+                      "expansion": {"semi_join"}, "fetch": {"driver"}}
     # == on Python floats is bitwise equality of the doubles
     assert ranks2 == ranks
     assert responses2 == responses
@@ -178,16 +181,61 @@ def test_cached_handle_follows_commits(spark, tmp_path):
     assert cat.open("fx2") is not ix
 
 
-def test_warm_single_term_search_runs_two_jobs(spark, base):
+def _warm_jobs(spark, base: str, body: dict,
+               group: str) -> tuple[dict, int]:
+    """Run ``body`` once to open the handle, then again under a job
+    group; returns the second response and its Spark job count."""
     api = ToshiApi(IndexCatalog(spark, base))
-    body = {"query": {"term": {"text": "w12"}}, "limit": 10}
     assert api.handle("POST", "/fx", body)[0] == 200  # opens the handle
     sc = spark.sparkContext
-    sc.setJobGroup("search_floor", "search_floor")
+    sc.setJobGroup(group, group)
     try:
         st, resp = api.handle("POST", "/fx", body)
     finally:
-        sc.setJobGroup("after_search_floor", "")
-    assert st == 200 and len(resp["docs"]) == 10
-    # the ranking job and the doc fetch; no open, no broadcast
-    assert len(sc.statusTracker().getJobIdsForGroup("search_floor")) == 2
+        sc.setJobGroup(f"after_{group}", "")
+    assert st == 200, resp
+    return resp, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_single_term_search_runs_one_job(spark, base):
+    resp, jobs = _warm_jobs(
+        spark, base, {"query": {"term": {"text": "w12"}}, "limit": 10},
+        "search_floor")
+    assert len(resp["docs"]) == 10
+    # the ranking job only: no open, no broadcast, no doc fetch
+    assert jobs == 1
+
+
+def test_warm_faceted_search_runs_at_most_four_jobs(spark, base):
+    resp, jobs = _warm_jobs(spark, base, BODIES[-1], "facet_floor")
+    assert len(resp["docs"]) == 10 and len(resp["facets"]) == 4
+    # ranking, plus the facet collector's join and aggregation; the
+    # counts are sorted on the driver
+    assert jobs <= 4, jobs
+
+
+def test_facet_counts_sorted_on_the_driver_in_spark_string_order(spark):
+    """Facet counts are sorted on the driver by UTF-8 bytes; the order
+    must equal Spark's string order, for multi-level and non-ASCII paths
+    (U+FF5E and U+1F600 sort differently in UTF-16)."""
+    from toshi_spark.engine import FullTextIndex
+    from toshi_spark.schema import FieldSpec, IndexSchema
+
+    paths = ["/a/b/c", "/a/b", "/a/B/x", "/a/é/1", "/a/z", "/a/Z",
+             "/a/\uff5e", "/a/\U0001f600/q", "/a/日本/東京", "/a/ä",
+             "/b/x", "/\U0001f600", "/\uff5e/y", "/é", "/A"]
+    rows = [(i, "x", p) for i, p in enumerate(paths * 2 + paths[:5])]
+    corpus = spark.createDataFrame(rows, "doc_id long, text string, "
+                                         "cat string")
+    schema = IndexSchema([FieldSpec("text", "text"),
+                          FieldSpec("cat", "facet", indexed=False)])
+    ix = FullTextIndex.build(spark, corpus, schema, cache=False)
+    for prefix, n_children in (("/", 6), ("/a", 9), ("/a/b", 1)):
+        got = ix.facet_counts(parse_search(
+            {"query": {"term": {"text": "x"}}, "facets": {"cat": [prefix]}}))
+        assert len(got) == n_children, (prefix, got)
+        ordered = spark.createDataFrame(
+            [(r["field"], r["value"]) for r in got],
+            "field string, value long").orderBy("field").collect()
+        assert [(r["field"], r["value"]) for r in ordered] == [
+            (r["field"], r["value"]) for r in got], prefix

@@ -58,7 +58,8 @@ def validate_document(schema: IndexSchema, doc: dict[str, Any]) -> None:
                     raise QueryError(
                         f"invalid value: integer `{v}`, expected u64"
                     )
-            elif spec.ftype in ("text", "facet") and not isinstance(v, str):
+            elif (spec.ftype in ("text", "facet", "date")
+                  and not isinstance(v, str)):
                 raise QueryError(f"invalid type: `{v!r}`, expected string")
 
 

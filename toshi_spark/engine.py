@@ -9,10 +9,12 @@ Lifecycle mapping (SURVEY.md §3.1): JSON DSL → dataclass tree (IR #1)
 → DataFrame program (IR #2 = Catalyst logical plan) over the handle's
 driver-held metadata (n_docs, avgdl per field, term df) → Catalyst
 optimizes → distributed execute → the top-k (doc_id, score) rows come
-to the driver → one pushed ``doc_id IN (…)`` scan of the row store
-fetches their stored fields → the k rows are ordered on the driver.
-A handle is opened once per commit (``IndexCatalog.open``), as Toshi
-opens a reader once per commit.
+to the driver → their stored fields come from the doc store (``fetch``)
+→ the k rows are ordered on the driver.  A handle is opened once per
+commit (``IndexCatalog.open``), as Toshi opens a reader once per
+commit; a catalog handle with a row store on disk reads the k winners'
+row groups with pyarrow on the driver (``searcher.doc``,
+``handle.rs:127-156``), so ranking is the last Spark job of a search.
 """
 
 from __future__ import annotations
@@ -95,8 +97,13 @@ class FullTextIndex:
         # catalog when it is within its row bound; None → each query
         # collects its own terms' rows of termstats
         self.term_dict: dict[tuple[str, str], int] | None = None
-        # which side of each size gate the last compile took:
-        # "term_dict" → driver|collect, "expansion" → literal|semi_join
+        # the committed row store's driver-side lookup
+        # (catalog.DocStore), set by the catalog when the row store is
+        # on disk; None → fetch scans ``corpus`` in a Spark job
+        self.doc_store = None
+        # which side of each size gate the last search took:
+        # "term_dict" → driver|collect, "expansion" → literal|semi_join,
+        # "fetch" → driver|spark
         self.gates: dict[str, str] = {}
 
     # convenience accessors used by the compiler
@@ -252,20 +259,32 @@ class FullTextIndex:
         ).orderBy(F.col("score").desc(), F.col("doc_id").asc())
 
     def fetch(self, top: list) -> list[tuple[float, int, Any]]:
-        """Stored fields of the top-k ``(score, doc_id)`` rows in ONE
-        pushed ``doc_id IN (…)`` scan of the row store; returns
-        (score, doc_id, row) ordered score desc, doc_id asc.  A doc the
-        row store lacks drops out, as it would from a join."""
+        """Stored fields of the top-k ``(score, doc_id)`` rows; returns
+        (score, doc_id, row) ordered score desc, doc_id asc, where
+        ``row`` maps each stored field to its value.  A doc the row
+        store lacks drops out, as it would from a join.
+
+        With a doc store (a catalog handle whose row store is on disk)
+        the rows are read on the driver, from only the row groups that
+        hold a winner; otherwise ONE pushed ``doc_id IN (…)`` scan of
+        ``corpus`` fetches them.  The doc store holds deleted docs too;
+        it needs no tombstone filter, as every winner comes from the
+        tombstone-filtered tables."""
+        self.gates["fetch"] = "spark" if self.doc_store is None else "driver"
         if not top:
             return []
         score = {r["doc_id"]: r["score"] for r in top}
-        rows = self.corpus.filter(
-            F.col(self.id_col).isin(list(score))
-        ).select(
-            F.col(self.id_col).cast("long").alias("__doc_id"),
-            *[F.col(n) for n in self._stored_names()],
-        ).collect()
-        hits = [(score[r["__doc_id"]], r["__doc_id"], r) for r in rows]
+        names = self._stored_names()
+        if self.doc_store is not None:
+            rows = self.doc_store.rows(score, names)
+        else:
+            rows = self.corpus.filter(
+                F.col(self.id_col).isin(list(score))
+            ).select(
+                F.col(self.id_col).cast("long").alias("doc_id"),
+                *[F.col(n) for n in names],
+            ).collect()
+        hits = [(score[r["doc_id"]], r["doc_id"], r) for r in rows]
         return sorted(hits, key=lambda h: (-h[0], h[1]))
 
     def facet_counts(self, search: Search,
@@ -274,7 +293,8 @@ class FullTextIndex:
 
         Only the FIRST requested facet path is extracted into the
         response (``handle.rs:146-155`` uses ``values()[0]``); counts are
-        per immediate child path, sorted by path (term order).
+        per immediate child path, sorted by path (term order) on the
+        driver: by UTF-8 bytes, which is Spark's string order.
         ``scored`` reuses an already-compiled matched set (one compile,
         one postings scan for top-k AND facets — recompiling would scan
         the postings twice per faceted search).
@@ -306,9 +326,9 @@ class FullTextIndex:
             .select(child.alias("facet_child"))
             .groupBy("facet_child")
             .agg(F.count("*").alias("value"))
-            .orderBy("facet_child")
             .collect()
         )
+        counts.sort(key=lambda r: r["facet_child"].encode("utf-8"))
         return [{"field": r["facet_child"], "value": r["value"]} for r in counts]
 
     def search(self, search: Search) -> SearchResults:

@@ -19,13 +19,18 @@ the Iceberg merge-on-read pattern; compaction folds them in.
 
 from __future__ import annotations
 
+import bisect
 import dataclasses
 import json
 import os
 import shutil
 import time
+from itertools import accumulate
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..analyzer import analyzer_version
@@ -54,6 +59,103 @@ DEFAULT_FLUSH_DISTRIBUTED_BYTES = 16 << 20
 # terms): 253 bytes per entry held, 296 at peak while building, so the
 # dict stays under about 50 MB of driver memory.
 TERM_DICT_MAX_ROWS = 200_000
+
+# row-store writes cap their parquet row groups at this many bytes, so a
+# driver lookup of k docs decodes at most k small blocks, as Tantivy's
+# doc store decompresses only the blocks that hold its hits
+ROWSTORE_ROW_GROUP_BYTES = 1 << 20
+
+
+def rowstore_fields(schema: IndexSchema,
+                    array_fields) -> list[tuple[str, str]]:
+    """The one (name, Spark type) layout of the row store: doc_id, then
+    every schema field, long for i64/u64 and string otherwise, as an
+    array once the field has gone multi-valued.  Both flush parses
+    write every field of it (null where no doc has the field) and the
+    Spark frame reads it, so no reader infers it from one part file;
+    :class:`DocStore` reads its stored columns, null where a part file
+    lacks one."""
+    out = [("doc_id", "long")]
+    for spec in schema.fields:
+        if spec.name == "doc_id":
+            continue
+        base = "long" if spec.ftype in ("i64", "u64") else "string"
+        out.append((spec.name, f"array<{base}>"
+                    if spec.name in array_fields else base))
+    return out
+
+
+def _ddl(fields: list[tuple[str, str]]) -> str:
+    return ", ".join(f"`{n}` {t}" for n, t in fields)
+
+
+def _part_files(root: str) -> list[str]:
+    """The parquet part files under ``root``, skipping the hidden and
+    ``_``-prefixed entries Spark's file listing skips."""
+    out = []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = sorted(x for x in dirs if x[0] not in "._")
+        out += [os.path.join(d, f) for f in sorted(files)
+                if f.endswith(".parquet") and f[0] not in "._"]
+    return out
+
+
+class DocStore:
+    """The committed row store as a driver-side doc store.
+
+    Built once per opened handle from the parquet footers of the
+    row-store part files: one (min doc_id, max doc_id, file, row group)
+    span per row group, sorted by min.  :meth:`rows` reads with pyarrow
+    only the row groups whose [min, max] holds a wanted doc_id, and runs
+    no Spark job.  (pyarrow 16's ``isin`` filter prunes no row group, so
+    the spans are kept here.)
+    """
+
+    def __init__(self, root: str):
+        self.files = _part_files(root)
+        spans = []
+        for fi, path in enumerate(self.files):
+            md = pq.read_metadata(path)
+            col = next(j for j in range(md.num_columns)
+                       if md.schema.column(j).path == "doc_id")
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(col).statistics
+                # a row group without min/max is read for every lookup
+                lo, hi = ((st.min, st.max) if st is not None
+                          and st.has_min_max else (-2**63, 2**63 - 1))
+                spans.append((lo, hi, fi, g))
+        spans.sort()
+        self._spans = spans
+        self._lo = [s[0] for s in spans]
+        # _reach[i] = the largest max of spans[0..i], so a backward walk
+        # from the last span starting at or below d stops at the first
+        # span no earlier one can reach d from
+        self._reach = list(accumulate((s[1] for s in spans), max))
+
+    def rows(self, doc_ids, names: list[str]) -> list[dict[str, Any]]:
+        """The rows holding ``doc_ids``, as {"doc_id", *names} dicts; a
+        column a part file lacks reads as null."""
+        groups: dict[int, set[int]] = {}
+        for d in doc_ids:
+            i = bisect.bisect_right(self._lo, d) - 1
+            while i >= 0 and self._reach[i] >= d:
+                lo, hi, fi, g = self._spans[i]
+                if hi >= d:
+                    groups.setdefault(fi, set()).add(g)
+                i -= 1
+        want = pa.array(sorted(doc_ids), pa.int64())
+        out = []
+        for fi in sorted(groups):
+            pf = pq.ParquetFile(self.files[fi])
+            have = set(pf.schema_arrow.names)
+            t = pf.read_row_groups(
+                sorted(groups[fi]),
+                columns=["doc_id"] + [n for n in names if n in have],
+            )
+            t = t.filter(pc.is_in(t["doc_id"], value_set=want))
+            out += [{n: r.get(n) for n in ["doc_id", *names]}
+                    for r in t.to_pylist()]
+        return out
 
 
 class IndexCatalog:
@@ -269,7 +371,9 @@ class IndexCatalog:
                 sdf = sdf.persist()
             else:
                 sdf, array_fields, n_new_ids = (
-                    self._parse_pending_driver(pending, next_id, sticky)
+                    self._parse_pending_driver(
+                        pending, schema, next_id, sticky
+                    )
                 )
             meta["next_doc_id"] = next_id + n_new_ids
             if array_fields:
@@ -296,10 +400,9 @@ class IndexCatalog:
             # the meta save replays the SAME pending docs into the SAME
             # directory — idempotent, so searches never see duplicate
             # stored rows (mirrors the manifest's dedupe-by-segment-id).
-            rowstore = os.path.join(self._dir(name), "rowstore")
-            sdf.write.mode("overwrite").parquet(
-                os.path.join(rowstore, f"flush-{seg_id}")
-            )
+            self._write_rowstore(
+                sdf, os.path.join(self._rowstore_path(name),
+                                  f"flush-{seg_id}"))
             if distributed:
                 sdf.unpersist()
             os.remove(pending)
@@ -312,16 +415,18 @@ class IndexCatalog:
         self._auto_merge(name)
         return opstamp
 
-    def _parse_pending_driver(self, pending: str, next_id: int,
-                              sticky: set[str]):
+    def _parse_pending_driver(self, pending: str, schema: IndexSchema,
+                              next_id: int, sticky: set[str]):
         """Small-buffer flush parse (driver-side json.loads loop).
 
         Multi-valued fields: once ANY doc supplies an array for a
         field, that field's row-store column becomes array-typed for
         every doc (sticky, recorded in index.json) — parquet cannot
         mix string and array<string> across appends.  Render collapses
-        singletons back (FlatNamedDocument).  Returns (sdf,
-        array_fields incl. sticky, count of writer-assigned ids).
+        singletons back (FlatNamedDocument).  The rows take the
+        :func:`rowstore_fields` layout, so a field no doc of the batch
+        carries is a typed null column.  Returns (sdf, array_fields
+        incl. sticky, count of writer-assigned ids).
         """
         with open(pending) as f:
             docs = [json.loads(line) for line in f if line.strip()]
@@ -340,7 +445,9 @@ class IndexCatalog:
                 for k in array_fields:
                     if k in doc and not isinstance(doc[k], list):
                         doc[k] = [doc[k]]
-        return self.spark.createDataFrame(docs), array_fields, n_new
+        sdf = self.spark.createDataFrame(
+            docs, _ddl(rowstore_fields(schema, array_fields)))
+        return sdf, array_fields, n_new
 
     def _parse_pending_distributed(self, pending: str,
                                    schema: IndexSchema, next_id: int,
@@ -351,14 +458,14 @@ class IndexCatalog:
         was the last single-threaded stage in the ingest path.
 
         Two distributed passes over the buffer (json.loads twice, but
-        N-wide): pass 1 discovers the seen-field set, which fields are
-        array-valued anywhere (the sticky promotion rule needs GLOBAL
-        knowledge before any row is emitted), and how many docs need
-        writer-assigned ids; pass 2 emits typed rows against the
-        schema computed from pass 1.  Per-line ordinals (zipWithIndex
-        over the offset-ordered text read) make writer-assigned ids
-        deterministic in LINE ORDER, byte-identical to the driver
-        loop's next_id++.
+        N-wide): pass 1 discovers which fields are array-valued
+        anywhere (the sticky promotion rule needs GLOBAL knowledge
+        before any row is emitted) and how many docs need
+        writer-assigned ids; pass 2 emits typed rows in the
+        :func:`rowstore_fields` layout that pass 1 fixes.  Per-line
+        ordinals (zipWithIndex over the offset-ordered text read) make
+        writer-assigned ids deterministic in LINE ORDER, byte-identical
+        to the driver loop's next_id++.
         """
         spark = self.spark
         rdd = (
@@ -376,47 +483,30 @@ class IndexCatalog:
 
             for pdf in batches:
                 arr: set[str] = set()
-                seen: set[str] = set()
                 missing = 0
                 for line in pdf["line"]:
                     d = _json.loads(line)
-                    seen.update(d.keys())
                     for k, v in d.items():
                         if isinstance(v, list):
                             arr.add(k)
                     if "doc_id" not in d:
                         missing += 1
                 yield _pd.DataFrame({
-                    "arr": [sorted(arr)], "seen": [sorted(seen)],
-                    "missing": [missing],
+                    "arr": [sorted(arr)], "missing": [missing],
                 })
 
         stats = ldf.mapInPandas(
-            probe, "arr array<string>, seen array<string>, missing long"
+            probe, "arr array<string>, missing long"
         ).collect()
-        seen_fields: set[str] = set()
         array_fields = set(sticky)
         n_missing = 0
         for r in stats:
-            seen_fields.update(r["seen"])
             array_fields.update(r["arr"])
             n_missing += int(r["missing"])
-        seen_fields.discard("doc_id")
 
-        def spark_type(f: str) -> str:
-            spec = schema.get(f)
-            base = (
-                "long"
-                if spec is not None and spec.ftype in ("i64", "u64")
-                else "string"
-            )
-            return f"array<{base}>" if f in array_fields else base
-
-        fields = sorted(seen_fields)
-        out_schema = ", ".join(
-            ["doc_id long", "_ln long"]
-            + [f"`{f}` {spark_type(f)}" for f in fields]
-        )
+        layout = rowstore_fields(schema, array_fields)
+        fields = [n for n, _t in layout[1:]]
+        out_schema = _ddl(layout[:1] + [("_ln", "long")] + layout[1:])
         arrf = frozenset(array_fields)
 
         def parse(batches):
@@ -494,13 +584,30 @@ class IndexCatalog:
 
     def _read_rowstore(self, name: str) -> DataFrame | None:
         """Row store = flat parquet (post-promotion rewrites) and/or
-        per-flush subdirectories (idempotent appends)."""
+        per-flush subdirectories (idempotent appends), read in the
+        committed :func:`rowstore_fields` layout: a part file that
+        lacks a column reads it as null."""
         rowstore = self._rowstore_path(name)
         if not os.path.exists(rowstore):
             return None
-        return self.spark.read.option(
+        # a column is an array where index.json lists it or a part
+        # file holds it as a list: a promotion swap lands before the
+        # flush that made it saves index.json, and a crash between the
+        # two must not leave the rewritten files read as scalars
+        arrays = set(self._meta(name).get("array_fields", []))
+        for path in _part_files(rowstore):
+            arrays.update(f.name for f in pq.read_schema(path)
+                          if pa.types.is_list(f.type))
+        layout = rowstore_fields(self.schema(name), arrays)
+        return self.spark.read.schema(_ddl(layout)).option(
             "recursiveFileLookup", "true"
         ).parquet(rowstore)
+
+    @staticmethod
+    def _write_rowstore(df: DataFrame, path: str) -> None:
+        df.write.mode("overwrite").option(
+            "parquet.block.size", ROWSTORE_ROW_GROUP_BYTES
+        ).parquet(path)
 
     def _recover_rowstore(self, name: str) -> None:
         """Finish or discard an interrupted array-promotion swap.
@@ -552,7 +659,7 @@ class IndexCatalog:
         if not changed:
             return
         tmp, old = rowstore + ".promote", rowstore + ".old"
-        df.write.mode("overwrite").parquet(tmp)
+        self._write_rowstore(df, tmp)
         # swap via rename-aside: the old row store is never deleted
         # before the new one is in place (_recover_rowstore completes
         # an interrupted swap on the next open/flush)
@@ -687,10 +794,13 @@ class IndexCatalog:
     def _open(self, name: str, schema: IndexSchema,
               corpus: DataFrame | None) -> FullTextIndex:
         tables = open_segmented_tables(self.spark, self._dir(name))
+        doc_store = None
         if corpus is None:
             corpus = self._read_rowstore(name)
             if corpus is None:
                 corpus = tables.doclens.select("doc_id").distinct()
+            else:
+                doc_store = DocStore(self._rowstore_path(name))
         # stored-field retrieval needs every stored column present; an
         # index opened without its row store (ingest() indexes a corpus
         # the caller owns) serves nulls for missing stored fields
@@ -711,6 +821,7 @@ class IndexCatalog:
         ix = FullTextIndex(self.spark, schema, corpus, tables,
                            id_col="doc_id", name=name)
         ix.term_dict = read_term_dict(self._dir(name), TERM_DICT_MAX_ROWS)
+        ix.doc_store = doc_store
         # attach the doc-sharded postings copy if one exists for THIS
         # segment set (build_doc_sharded); deletes apply at read via
         # the handle's tombstone anti-join, so only a manifest change
