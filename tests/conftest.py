@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -13,3 +14,28 @@ def spark():
     s = get_spark("toshi_spark_tests", cores=4, shuffle_partitions=8,
                   extra_conf={"spark.driver.memory": "4g"})
     yield s
+
+
+@contextmanager
+def _count_py4j_calls():
+    from py4j.java_gateway import GatewayClient
+
+    send = GatewayClient.send_command
+    box = [0]
+
+    def counting(self, *args, **kwargs):
+        box[0] += 1
+        return send(self, *args, **kwargs)
+
+    GatewayClient.send_command = counting
+    try:
+        yield box
+    finally:
+        GatewayClient.send_command = send
+
+
+@pytest.fixture
+def py4j_calls():
+    """``with py4j_calls() as n:`` counts the driver's py4j round trips
+    made inside the block into ``n[0]``."""
+    return _count_py4j_calls

@@ -20,6 +20,7 @@ import re
 from pyspark.sql import Row, functions as F
 
 from toshi_spark.index.bucketed import term_bucket_col, term_bucket_py
+from toshi_spark.query import compiler
 from toshi_spark.query.dsl import parse_search
 
 
@@ -87,7 +88,10 @@ def test_results_identical_with_doc_sharded_copy(spark, tmp_path):
         assert _rows(ix.search_df(parse_search(q))) == before[name], name
 
 
-def test_phrase_and_bool_plans_have_zero_doc_id_exchanges(spark, tmp_path):
+def test_phrase_and_bool_plans_have_zero_doc_id_exchanges(spark, tmp_path,
+                                                          monkeypatch):
+    # above the single-task row bound, where the default layout shuffles
+    monkeypatch.setattr(compiler, "AGG_SINGLE_MAX_ROWS", 0)
     ix = _search_index(spark, tmp_path).enable_doc_bucketed(
         str(tmp_path / "docb"), n_term_partitions=8, n_buckets=4)
     for q in (PHRASE, BOOL):
@@ -113,12 +117,15 @@ def test_single_term_keeps_term_sorted_layout(spark, tmp_path):
     assert "toshi_docb" not in plan, plan
 
 
-def test_catalog_doc_sharded_lifecycle(spark, tmp_path):
+def test_catalog_doc_sharded_lifecycle(spark, tmp_path, monkeypatch):
     """The production wiring: build_doc_sharded stamps the copy with
     the manifest fingerprint; open() attaches it while the stamp
     matches; committed deletes filter at read (copy stays); new
     segments make the stale copy fall away until rebuilt."""
     from toshi_spark.index.catalog import IndexCatalog
+
+    # above the single-task row bound, where the default layout shuffles
+    monkeypatch.setattr(compiler, "AGG_SINGLE_MAX_ROWS", 0)
 
     cat = IndexCatalog(spark, str(tmp_path))
     cat.create_index("dsx", [{"name": "text", "ftype": "text",

@@ -236,3 +236,37 @@ def test_bulk_rejects_a_non_string_date(spark, tmp_path):
                           {"query": {"term": {"text": "w2"}}})
     assert [d["doc"]["day"] for d in resp["docs"]] == [
         "2020-01-01T00:00:00Z"]
+
+
+def test_doc_store_span_bound_takes_the_spark_fetch(spark, tmp_path,
+                                                    monkeypatch):
+    """Above ``DOC_STORE_MAX_SPANS`` row groups a handle holds no footer
+    index and fetches in Spark; the API responses stay identical."""
+    cat = IndexCatalog(spark, str(tmp_path))
+    api = ToshiApi(cat)
+    assert api.handle("PUT", "/fx/_create", SCHEMA)[0] == 201
+    _bulk_flush(api, [_doc(i) for i in range(0, 40)])
+    _bulk_flush(api, [_doc(i) for i in range(40, 80)])
+
+    def responses(bound):
+        monkeypatch.setattr(catalog_mod, "DOC_STORE_MAX_SPANS", bound)
+        cat2 = IndexCatalog(spark, str(tmp_path))
+        api2 = ToshiApi(cat2)
+        out = []
+        for body in BODIES:
+            st, resp = api2.handle("POST", "/fx", body)
+            assert st == 200, resp
+            out.append(resp)
+        ix = cat2.open("fx")
+        return out, ix.doc_store is not None, ix.gates["fetch"]
+
+    spans = sum(pq.read_metadata(p).num_row_groups for p in
+                catalog_mod._part_files(cat._rowstore_path("fx")))
+    assert spans >= 2
+    held, has_store, gate = responses(spans)
+    assert (has_store, gate) == (True, "driver")
+    pushed, has_store, gate = responses(spans - 1)
+    assert (has_store, gate) == (False, "spark")
+    # == on Python floats is bitwise equality of the doubles
+    assert pushed == held
+    assert all(r["docs"] for r in held)

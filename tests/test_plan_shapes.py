@@ -129,6 +129,8 @@ def test_mix_weights_normalizers_broadcast_not_cartesian(spark):
 
 import re
 
+import pytest
+
 
 def _hash_exchanges(df) -> list[str]:
     plan = _plan(df)
@@ -174,11 +176,21 @@ def test_single_term_plan_has_no_data_scale_exchange(spark, tmp_path):
     assert len(df.collect()) == 10
 
 
-def test_phrase_plan_has_exactly_one_doc_id_exchange(spark, tmp_path):
+PHRASE_BODY = {"query": {"phrase": {"text": {"terms": ["alpha", "beta"]}}},
+               "limit": 10}
+BOOL_BODY = {"query": {"bool": {"must": [{"term": {"text": "spark"}}],
+                                "must_not": [{"term": {"text": "tok3"}}]}},
+             "limit": 10}
+
+
+def test_phrase_plan_has_exactly_one_doc_id_exchange(spark, tmp_path,
+                                                     monkeypatch):
     """Phrase: the term→positions groupBy is the one doc_id exchange;
-    nothing is broadcast."""
+    nothing is broadcast.  (Above the single-task row bound, here 0.)"""
+    from toshi_spark.query import compiler
     from toshi_spark.query.dsl import parse_search
 
+    monkeypatch.setattr(compiler, "AGG_SINGLE_MAX_ROWS", 0)
     ix = _search_index(spark, tmp_path)
     df = ix.rank_df(
         parse_search({"query": {"phrase": {"text": {"terms":
@@ -188,11 +200,15 @@ def test_phrase_plan_has_exactly_one_doc_id_exchange(spark, tmp_path):
     assert len(df.collect()) == 10
 
 
-def test_bool_fast_path_has_exactly_one_doc_id_exchange(spark, tmp_path):
+def test_bool_fast_path_has_exactly_one_doc_id_exchange(spark, tmp_path,
+                                                        monkeypatch):
     """Bool fast path: one fused doc_id exchange (conditional-sum agg),
-    not the two-phase distinct shape; nothing is broadcast."""
+    not the two-phase distinct shape; nothing is broadcast.  (Above the
+    single-task row bound, here 0.)"""
+    from toshi_spark.query import compiler
     from toshi_spark.query.dsl import parse_search
 
+    monkeypatch.setattr(compiler, "AGG_SINGLE_MAX_ROWS", 0)
     ix = _search_index(spark, tmp_path)
     df = ix.rank_df(
         parse_search({"query": {"bool": {
@@ -201,6 +217,23 @@ def test_bool_fast_path_has_exactly_one_doc_id_exchange(spark, tmp_path):
         }}, "limit": 10})
     )
     assert _hash_exchanges(df) == ["doc_id"]
+    assert len(df.collect()) == 10
+
+
+@pytest.mark.parametrize("body", [PHRASE_BODY, BOOL_BODY, {
+    "query": {"fuzzy": {"text": {"value": "spark", "distance": 1}}},
+    "limit": 10}], ids=["phrase", "bool", "fuzzy"])
+def test_small_aggregation_plans_no_exchange(spark, tmp_path, body):
+    """Under the single-task row bound the aggregating shapes read a
+    scan coalesced to one partition: no Exchange at all, nothing
+    broadcast."""
+    from toshi_spark.query.dsl import parse_search
+
+    ix = _search_index(spark, tmp_path)
+    df = ix.rank_df(parse_search(body))
+    assert _hash_exchanges(df) == []
+    assert "Coalesce 1" in _plan(df)
+    assert ix.gates["agg"] == "single"
     assert len(df.collect()) == 10
 
 

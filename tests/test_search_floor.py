@@ -13,8 +13,15 @@ the driver (tests/test_doc_store.py).  These tests pin:
 - that the cached handle follows commits (a flushed add, a committed
   delete);
 - that a warm single-term search runs exactly one Spark job, and a
-  faceted search at most four.
+  faceted search at most four;
+- that both sides of the aggregation gate (one task, or a doc_id
+  shuffle) give bit-identical results, and that under the gate's row
+  bound a warm bool, phrase, fuzzy or regex search runs one job;
+- that a warm search of the benchmark mix makes at most 60 py4j round
+  trips (median over the 11 body shapes).
 """
+
+import statistics
 
 import json
 
@@ -106,6 +113,7 @@ def _run(spark, base: str) -> tuple[list, dict, list]:
 def test_both_gate_branches_agree_bitwise(spark, base, monkeypatch):
     ranks, gates, responses = _run(spark, base)
     assert gates == {"term_dict": {"driver"}, "expansion": {"literal"},
+                     "expansion_source": {"driver"}, "agg": {"single"},
                      "fetch": {"driver"}}
     # every shape returns hits, so the comparison is not vacuous
     assert all(ranks), [len(r) for r in ranks]
@@ -115,7 +123,9 @@ def test_both_gate_branches_agree_bitwise(spark, base, monkeypatch):
     monkeypatch.setattr(compiler_mod, "EXPANSION_MAX_TERMS", 1)
     ranks2, gates2, responses2 = _run(spark, base)
     assert gates2 == {"term_dict": {"collect"},
-                      "expansion": {"semi_join"}, "fetch": {"driver"}}
+                      "expansion": {"semi_join"},
+                      "expansion_source": {"spark"},
+                      "agg": {"single", "shuffle"}, "fetch": {"driver"}}
     # == on Python floats is bitwise equality of the doubles
     assert ranks2 == ranks
     assert responses2 == responses
@@ -136,7 +146,7 @@ def test_compile_term_equals_bm25_score(spark, base):
 
     ix = IndexCatalog(spark, base).open("fx")
     for term in ("w1", "w12", "w16"):
-        got = Compiler(ix).compile_term(ExactTerm("text", term))
+        got = Compiler(ix).compile(ExactTerm("text", term))
         matched = ix.postings.filter(
             (F.col("field") == "text") & (F.col("term") == term)
         ).select("field", "term", "doc_id", "tf", "doc_len")
@@ -239,3 +249,49 @@ def test_facet_counts_sorted_on_the_driver_in_spark_string_order(spark):
             "field string, value long").orderBy("field").collect()
         assert [(r["field"], r["value"]) for r in ordered] == [
             (r["field"], r["value"]) for r in got], prefix
+
+
+# the search benchmark's 11 body shapes: BODIES plus a third term body
+MIX = BODIES[:2] + [{"query": {"term": {"text": "w16"}}, "limit": 10}] \
+    + BODIES[2:]
+AGG_BODIES = [BODIES[2], BODIES[3], BODIES[4], BODIES[5], BODIES[7]]
+
+
+def test_agg_gate_branches_agree_bitwise(spark, base, monkeypatch):
+    def ranks():
+        ix = IndexCatalog(spark, base).open("fx")
+        out, gates = [], set()
+        for body in AGG_BODIES:
+            out.append([(r["doc_id"], r["score"]) for r in
+                        ix.rank_df(parse_search(body)).collect()])
+            gates.add(ix.gates["agg"])
+        return out, gates
+
+    single, g1 = ranks()
+    monkeypatch.setattr(compiler_mod, "AGG_SINGLE_MAX_ROWS", 0)
+    shuffled, g2 = ranks()
+    assert (g1, g2) == ({"single"}, {"shuffle"})
+    assert all(single)
+    # == on Python floats is bitwise equality of the doubles
+    assert single == shuffled
+
+
+@pytest.mark.parametrize("i", range(len(AGG_BODIES)))
+def test_warm_aggregating_search_runs_one_job(spark, base, i):
+    resp, jobs = _warm_jobs(spark, base, AGG_BODIES[i], f"agg_floor_{i}")
+    assert resp["docs"]
+    # under the agg bound the scan is coalesced: no Exchange, no AQE
+    # re-plan, so ranking is one job
+    assert jobs == 1, (AGG_BODIES[i], jobs)
+
+
+def test_warm_search_py4j_floor(spark, base, py4j_calls):
+    api = ToshiApi(IndexCatalog(spark, base))
+    counts = []
+    for body in MIX:
+        assert api.handle("POST", "/fx", body)[0] == 200  # warm
+        with py4j_calls() as n:
+            st, resp = api.handle("POST", "/fx", body)
+        assert st == 200, resp
+        counts.append(n[0])
+    assert statistics.median(counts) <= 60, counts

@@ -18,8 +18,9 @@ Layout
                     varint/bitpack block segments, manifest + resume,
                     log-merge compaction, catalog.
 - ``query``       — Toshi JSON query DSL (term/phrase/fuzzy/regex/range/
-                    bool/all/raw) compiled to DataFrame programs; BM25
-                    top-k with a block-max two-phase fast path.
+                    bool/all/raw) compiled to one Spark SQL statement
+                    per search; BM25 top-k with a block-max two-phase
+                    fast path.
 - ``scoring``     — BM25 (k1=1.2, b=0.75) as native column arithmetic.
 - ``pipeline``    — training-data ops: dedup (exact/MinHash-LSH/SimHash/
                     n-gram Jaccard), ANN similarity search, text quality

@@ -6,15 +6,20 @@ optional sorted-top-k, optional facet counter), lower the DSL to an
 executable query, run, fetch stored docs, assemble SearchResults.
 
 Lifecycle mapping (SURVEY.md §3.1): JSON DSL → dataclass tree (IR #1)
-→ DataFrame program (IR #2 = Catalyst logical plan) over the handle's
-driver-held metadata (n_docs, avgdl per field, term df) → Catalyst
+→ one Spark SQL statement (IR #2, ``query/compiler.py``) over the
+handle's temp views, built from its driver-held metadata (n_docs,
+avgdl per field, term df, and the fuzzy/regex expansion from the held
+term dictionary) with the top-k ORDER BY/LIMIT inside it → Catalyst
 optimizes → distributed execute → the top-k (doc_id, score) rows come
 to the driver → their stored fields come from the doc store (``fetch``)
 → the k rows are ordered on the driver.  A handle is opened once per
 commit (``IndexCatalog.open``), as Toshi opens a reader once per
-commit; a catalog handle with a row store on disk reads the k winners'
-row groups with pyarrow on the driver (``searcher.doc``,
-``handle.rs:127-156``), so ranking is the last Spark job of a search.
+commit; it registers a temp view of each relation a statement reads
+(``view``) once, and the catalog drops them when a commit replaces
+the handle.  A catalog handle with a row store on disk reads the k
+winners' row groups with pyarrow on the driver (``searcher.doc``,
+``handle.rs:127-156``), so ranking is the only Spark job of a term,
+bool, phrase, fuzzy, regex, range or raw search.
 """
 
 from __future__ import annotations
@@ -22,11 +27,12 @@ from __future__ import annotations
 from dataclasses import dataclass, field as dc_field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from .index.builder import IndexTables, build_index
-from .query.compiler import Compiler
+from .query.compiler import Compiler, sql_ident, sql_num, sql_str
 from .query.dsl import AllQuery, Search, parse_search
+from .query.expand import FieldTerms, field_terms
 from .schema import IndexSchema, QueryError
 
 
@@ -101,10 +107,16 @@ class FullTextIndex:
         # (catalog.DocStore), set by the catalog when the row store is
         # on disk; None → fetch scans ``corpus`` in a Spark job
         self.doc_store = None
-        # which side of each size gate the last search took:
-        # "term_dict" → driver|collect, "expansion" → literal|semi_join,
+        # which side of each gate the last search took: "term_dict" →
+        # driver|collect, "expansion" → literal|semi_join,
+        # "expansion_source" → driver|spark, "agg" → single|shuffle,
         # "fetch" → driver|spark
         self.gates: dict[str, str] = {}
+        # kind → (source relation, temp view name); see view()
+        self._views: dict[str, tuple[Any, str]] = {}
+        # (term_dict, {field: FieldTerms}), built at the first fuzzy or
+        # regex search that expands on the driver
+        self._field_terms: tuple[dict, dict[str, FieldTerms]] | None = None
 
     # convenience accessors used by the compiler
     @property
@@ -138,10 +150,53 @@ class FullTextIndex:
             return {t: self.term_dict[(field, t)] for t in terms
                     if (field, t) in self.term_dict}
         self.gates["term_dict"] = "collect"
-        rows = self.termstats.filter(
-            (F.col("field") == field) & F.col("term").isin(list(terms))
-        ).select("term", "df").collect()
+        rows = self.spark.sql(
+            f"SELECT term, df FROM {self.view('termstats')} "
+            f"WHERE field = {sql_str(field)} AND term IN "
+            f"({', '.join(sql_str(t) for t in terms)})").collect()
         return {r["term"]: int(r["df"]) for r in rows}
+
+    def field_terms(self, field: str) -> FieldTerms | None:
+        """The held dictionary's terms of ``field`` (None: the handle
+        holds no dictionary), built for every field at first use."""
+        if self.term_dict is None:
+            return None
+        if self._field_terms is None or self._field_terms[0] is not self.term_dict:
+            self._field_terms = (self.term_dict, field_terms(self.term_dict))
+        return self._field_terms[1].get(field) or FieldTerms([])
+
+    # -------------------------------------------------------------- views
+
+    def view(self, kind: str) -> str:
+        """The name of this handle's temp view of one of its relations
+        ("postings", "termstats", "corpus" or "docb", the doc-sharded
+        copy), registered at the first statement that reads it and
+        again after the handle's relation is replaced."""
+        source = {"postings": self.tables.postings,
+                  "termstats": self.tables.termstats,
+                  "corpus": self.corpus,
+                  "docb": self.doc_bucketed}[kind]
+        have = self._views.get(kind)
+        if have is not None and have[0] is source:
+            return have[1]
+        # named by object id: unique among live handles, and a view left
+        # by a collected handle is simply replaced
+        name = f"toshi_ix{id(self):x}_{kind}"
+        frame = source.frame() if kind == "docb" else source
+        frame.createOrReplaceTempView(name)
+        self._views[kind] = (source, name)
+        return name
+
+    def view_names(self) -> list[str]:
+        """The temp views this handle has registered."""
+        return sorted(name for _src, name in self._views.values())
+
+    def drop_views(self) -> None:
+        """Drop this handle's temp views (its owner replaced or deleted
+        it); a later statement on the handle registers them again."""
+        for name in self.view_names():
+            self.spark.catalog.dropTempView(name)
+        self._views.clear()
 
     def enable_doc_bucketed(
         self,
@@ -205,58 +260,32 @@ class FullTextIndex:
 
     # ------------------------------------------------------------- search
 
-    def rank_df(self, search: Search,
-                scored: DataFrame | None = None) -> DataFrame:
-        """Compile + rank; returns the lazy top-k (score, doc_id) frame,
-        ordered score desc, doc_id asc.  ``scored`` optionally supplies
-        an already-compiled (doc_id, score) set — ``search()`` shares
-        one compile between the top-k and the facet collector."""
+    def rank_df(self, search: Search, scored: str | None = None) -> DataFrame:
+        """Compile + rank as one statement; returns the lazy top-k
+        (score, doc_id) frame, ordered score desc, doc_id asc.
+        ``scored`` optionally supplies an already-compiled (doc_id,
+        score) relation as SQL text — ``search()`` shares one compile
+        between the top-k and the facet collector."""
         if search.query is None:
             raise QueryError("Empty Query Provided")  # handle.rs:158-160
+        comp = Compiler(self)
         if scored is None:
             search.query.validate()
-            scored = Compiler(self).compile(search.query)
-        sort_spec = self.schema.get(search.sort_by) if search.sort_by else None
-        if (
-            sort_spec is not None
-            and sort_spec.fast
-            and sort_spec.stored
-            and sort_spec.ftype == "u64"
-        ):
-            # top-k by fast field: returned "score" IS the field value
-            # (handle.rs:82-92,127-134); silent fallback otherwise.
-            scored = (
-                scored.select("doc_id")
-                .alias("s")
-                .join(self.corpus.alias("c"),
-                      F.col("s.doc_id") == F.col(f"c.{self.id_col}"))
-                .select(
-                    F.col(f"c.{sort_spec.name}").cast("double").alias("score"),
-                    F.col("s.doc_id").alias("doc_id"),
-                )
-            )
-        return scored.select("score", "doc_id").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        ).limit(search.limit)
+            return comp.compile(search.query, search)
+        return self.spark.sql(comp.ranked(scored, search))
 
     def _stored_names(self) -> list[str]:
         return [f.name for f in self.schema.fields if f.stored]
 
-    def search_df(self, search: Search,
-                  scored: DataFrame | None = None) -> DataFrame:
-        """``rank_df`` joined to the row store; returns (score, doc_id,
-        <stored fields>), ordered and limited, still lazy (used
-        directly by the driver-contract ``queries()``)."""
-        ranked = self.rank_df(search, scored=scored)
-        corpus = self.corpus.alias("c")
-        fetched = F.broadcast(ranked.alias("r")).join(
-            corpus, F.col("r.doc_id") == F.col(f"c.{self.id_col}")
-        )
-        return fetched.select(
-            F.col("r.score").alias("score"),
-            F.col("r.doc_id").alias("doc_id"),
-            *[F.col(f"c.{n}").alias(n) for n in self._stored_names()],
-        ).orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    def search_df(self, search: Search) -> DataFrame:
+        """``rank_df`` joined to the row store, in the same statement;
+        returns (score, doc_id, <stored fields>), ordered and limited,
+        still lazy (used directly by the driver-contract ``queries()``)."""
+        if search.query is None:
+            raise QueryError("Empty Query Provided")
+        search.query.validate()
+        return Compiler(self).compile(search.query, search,
+                                      stored=self._stored_names())
 
     def fetch(self, top: list) -> list[tuple[float, int, Any]]:
         """Stored fields of the top-k ``(score, doc_id)`` rows; returns
@@ -278,26 +307,27 @@ class FullTextIndex:
         if self.doc_store is not None:
             rows = self.doc_store.rows(score, names)
         else:
-            rows = self.corpus.filter(
-                F.col(self.id_col).isin(list(score))
-            ).select(
-                F.col(self.id_col).cast("long").alias("doc_id"),
-                *[F.col(n) for n in names],
+            key = sql_ident(self.id_col)
+            cols = "".join(f", {sql_ident(n)}" for n in names)
+            ids = ", ".join(sql_num(int(d)) for d in score)
+            rows = self.spark.sql(
+                f"SELECT CAST({key} AS BIGINT) AS doc_id{cols} "
+                f"FROM {self.view('corpus')} WHERE {key} IN ({ids})"
             ).collect()
         hits = [(score[r["doc_id"]], r["doc_id"], r) for r in rows]
         return sorted(hits, key=lambda h: (-h[0], h[1]))
 
     def facet_counts(self, search: Search,
-                     scored: DataFrame | None = None) -> list[dict[str, Any]]:
+                     scored: str | None = None) -> list[dict[str, Any]]:
         """Facet counting with the reference's first-value extraction quirk.
 
         Only the FIRST requested facet path is extracted into the
         response (``handle.rs:146-155`` uses ``values()[0]``); counts are
         per immediate child path, sorted by path (term order) on the
         driver: by UTF-8 bytes, which is Spark's string order.
-        ``scored`` reuses an already-compiled matched set (one compile,
-        one postings scan for top-k AND facets — recompiling would scan
-        the postings twice per faceted search).
+        ``scored`` reuses an already-compiled matched relation (one
+        compile, one postings scan for top-k AND facets — recompiling
+        would scan the postings twice per faceted search).
         """
         if search.facets is None:
             return []
@@ -307,46 +337,38 @@ class FullTextIndex:
             return []  # handle.rs:95-105: silently no facet collector
         if not fq.values:
             return []
+        comp = Compiler(self)
         if scored is None:
-            scored = Compiler(self).compile(search.query or AllQuery())
+            scored = comp.sql(search.query or AllQuery())
         prefix = fq.values[0].rstrip("/")
         depth = len([p for p in prefix.split("/") if p]) + 1
-        matched = scored.select("doc_id").alias("s").join(
-            self.corpus.alias("c"),
-            F.col("s.doc_id") == F.col(f"c.{self.id_col}"),
-        )
-        child = F.concat(
-            F.lit("/"),
-            F.array_join(
-                F.slice(F.split(F.col(f"c.{fq.field}"), "/"), 2, depth), "/"
-            ),
-        )
-        counts = (
-            matched.filter(F.col(f"c.{fq.field}").startswith(prefix + "/"))
-            .select(child.alias("facet_child"))
-            .groupBy("facet_child")
-            .agg(F.count("*").alias("value"))
-            .collect()
-        )
+        counts = self.spark.sql(
+            comp.facet_counts(scored, fq.field, prefix, depth)).collect()
         counts.sort(key=lambda r: r["facet_child"].encode("utf-8"))
         return [{"field": r["facet_child"], "value": r["value"]} for r in counts]
 
     def search(self, search: Search) -> SearchResults:
         # with facets requested, compile ONCE and persist the matched
-        # set: both collectors (top-k, facet counter) reuse it instead
-        # of re-scanning the postings (VERDICT r2 #6)
-        scored = None
+        # set: both collectors (top-k, facet counter) read it through a
+        # scratch view instead of re-scanning the postings (VERDICT r2
+        # #6).  The view is dropped only after both ran: dropping a
+        # view uncaches the frame it names.
+        scored = view = rel = None
         if search.facets is not None and search.query is not None:
             search.query.validate()
             scored = Compiler(self).compile(search.query).persist()
+            view = f"toshi_ix{id(self):x}_scored{id(scored):x}"
+            scored.createOrReplaceTempView(view)
+            rel = f"SELECT doc_id, score FROM {view}"
         try:
-            top = self.rank_df(search, scored=scored).collect()
+            top = self.rank_df(search, scored=rel).collect()
             facets = (
-                self.facet_counts(search, scored=scored)
+                self.facet_counts(search, scored=rel)
                 if search.facets else []
             )
         finally:
             if scored is not None:
+                self.spark.catalog.dropTempView(view)
                 scored.unpersist()
 
         def render(v):

@@ -27,8 +27,7 @@ terms:
 so a phrase/bool query becomes: prune term_bkt dirs -> filter terms ->
 groupBy doc_id with NO Exchange (pinned in tests/test_bucketed.py).
 Single-term queries keep the term-sorted layout; the compiler routes
-only multi-term leaf scans here (query/compiler.py
-``_postings_for_terms``).
+only multi-term leaf scans here (query/compiler.py ``_scan``).
 
 The term bucket uses an md5-prefix hash (not ``F.hash``) so the
 driver can compute a query term's bucket WITHOUT a Spark job — the
@@ -85,26 +84,21 @@ class DocBucketedPostings:
             n_buckets=self.n_buckets, tombstones=tomb,
         )
 
-    def postings_for_terms(self, field: str, terms: list[str]) -> DataFrame:
-        """Pruned scan: only the query terms' partition dirs are read
-        (partition filters on field + term_bkt), and the result keeps
-        the bucketed-by-doc_id distribution — the downstream
-        groupBy/join on doc_id plans with zero Exchanges (a broadcast
-        anti-join for tombstones preserves the streamed side's
-        partitioning, so deletes don't cost the exchange back)."""
-        bkts = sorted({term_bucket_py(t, self.n_term_partitions)
+    def buckets(self, terms: list[str]) -> list[int]:
+        """The term buckets that hold ``terms``: a query on them reads
+        only those partition dirs (partition filters on field +
+        term_bkt), and the scan keeps the bucketed-by-doc_id
+        distribution — the downstream group/join on doc_id plans with
+        zero Exchanges."""
+        return sorted({term_bucket_py(t, self.n_term_partitions)
                        for t in terms})
-        t = self.spark.table(self.table)
-        tcond = (F.col("term") == terms[0] if len(terms) == 1
-                 else F.col("term").isin(terms))
-        out = (
-            t.filter(
-                (F.col("field") == field)
-                & F.col(TERM_BKT).isin(bkts)
-                & tcond
-            )
-            .drop(TERM_BKT)
-        )
+
+    def frame(self) -> DataFrame:
+        """The copy's rows less the tombstoned docs.  A broadcast
+        anti-join for the tombstones preserves the streamed side's
+        partitioning, so deletes don't cost the exchange back, and
+        filters on the copy's columns push below it to the scan."""
+        out = self.spark.table(self.table)
         if self.tombstones is not None:
             out = out.join(F.broadcast(self.tombstones), "doc_id",
                            "left_anti")

@@ -29,6 +29,7 @@ from functools import cached_property
 from pyspark.sql import DataFrame, functions as F
 
 from ..analyzer import ANALYZE_SCHEMA, analyze_arrow_batches, get_analyzer
+from ..query.compiler import sql_ident
 
 
 @dataclass
@@ -75,8 +76,10 @@ def analyze_corpus(
 ) -> DataFrame:
     """corpus → per-(doc, term) rows with tf, positions, doc_len."""
     field = field or text_col
+    # quoted: a field name may hold a dot, a space or a backtick
     proj = corpus.select(
-        F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
+        F.col(sql_ident(id_col)).cast("long").alias("doc_id"),
+        F.col(sql_ident(text_col)).alias("text"),
     )
     # mapInArrow: RecordBatches in/out, flat buffers — no per-row
     # pandas objects on the Python→JVM hop.  The analyzer is resolved

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..analyzer import analyzer_version
 from ..engine import FullTextIndex
+from ..query.compiler import sql_ident
 from ..schema import FieldSpec, IndexSchema, QueryError
 from .builder import build_index
 from .segments import (
@@ -59,6 +60,12 @@ DEFAULT_FLUSH_DISTRIBUTED_BYTES = 16 << 20
 # terms): 253 bytes per entry held, 296 at peak while building, so the
 # dict stays under about 50 MB of driver memory.
 TERM_DICT_MAX_ROWS = 200_000
+
+# an opened handle holds the row store's footer index (DocStore) while
+# the row-store part files hold at most this many row groups; above it
+# the winners' stored fields come from a Spark fetch.  A span costs
+# about 170 bytes held, so the index stays under about 34 MB.
+DOC_STORE_MAX_SPANS = 200_000
 
 # row-store writes cap their parquet row groups at this many bytes, so a
 # driver lookup of k docs decodes at most k small blocks, as Tantivy's
@@ -86,7 +93,7 @@ def rowstore_fields(schema: IndexSchema,
 
 
 def _ddl(fields: list[tuple[str, str]]) -> str:
-    return ", ".join(f"`{n}` {t}" for n, t in fields)
+    return ", ".join(f"{sql_ident(n)} {t}" for n, t in fields)
 
 
 def _part_files(root: str) -> list[str]:
@@ -105,17 +112,17 @@ class DocStore:
 
     Built once per opened handle from the parquet footers of the
     row-store part files: one (min doc_id, max doc_id, file, row group)
-    span per row group, sorted by min.  :meth:`rows` reads with pyarrow
+    span per row group, sorted by min; :meth:`open` builds none above
+    ``DOC_STORE_MAX_SPANS`` spans.  :meth:`rows` reads with pyarrow
     only the row groups whose [min, max] holds a wanted doc_id, and runs
     no Spark job.  (pyarrow 16's ``isin`` filter prunes no row group, so
     the spans are kept here.)
     """
 
-    def __init__(self, root: str):
-        self.files = _part_files(root)
+    def __init__(self, files: list[str], footers: list):
+        self.files = files
         spans = []
-        for fi, path in enumerate(self.files):
-            md = pq.read_metadata(path)
+        for fi, md in enumerate(footers):
             col = next(j for j in range(md.num_columns)
                        if md.schema.column(j).path == "doc_id")
             for g in range(md.num_row_groups):
@@ -131,6 +138,17 @@ class DocStore:
         # from the last span starting at or below d stops at the first
         # span no earlier one can reach d from
         self._reach = list(accumulate((s[1] for s in spans), max))
+
+    @classmethod
+    def open(cls, root: str) -> "DocStore | None":
+        """The doc store of the row store under ``root``, or None when
+        its part files hold more than ``DOC_STORE_MAX_SPANS`` row
+        groups (counted from the footers before any span is built)."""
+        files = _part_files(root)
+        footers = [pq.read_metadata(p) for p in files]
+        if sum(md.num_row_groups for md in footers) > DOC_STORE_MAX_SPANS:
+            return None
+        return cls(files, footers)
 
     def rows(self, doc_ids, names: list[str]) -> list[dict[str, Any]]:
         """The rows holding ``doc_ids``, as {"doc_id", *names} dicts; a
@@ -787,6 +805,7 @@ class IndexCatalog:
             if cached is not None and cached[0] == fp:
                 return cached[1]
             ix = self._open(name, schema, None)
+            self._forget(name)
             self._handles[name] = (fp, ix)
             return ix
         return self._open(name, schema, corpus)
@@ -800,7 +819,7 @@ class IndexCatalog:
             if corpus is None:
                 corpus = tables.doclens.select("doc_id").distinct()
             else:
-                doc_store = DocStore(self._rowstore_path(name))
+                doc_store = DocStore.open(self._rowstore_path(name))
         # stored-field retrieval needs every stored column present; an
         # index opened without its row store (ingest() indexes a corpus
         # the caller owns) serves nulls for missing stored fields
@@ -881,7 +900,7 @@ class IndexCatalog:
             n_term_partitions=n_term_partitions, n_buckets=n_buckets,
             extra_meta={"manifest_fingerprint": fp},
         )
-        self._handles.pop(name, None)  # the next open attaches the copy
+        self._forget(name)  # the next open attaches the copy
         return path
 
     def commit_fingerprint(self, name: str) -> str:
@@ -956,7 +975,14 @@ class IndexCatalog:
             }
         return out
 
+    def _forget(self, name: str) -> None:
+        """Drop the cached handle of ``name`` and its temp views, so no
+        statement reads a replaced commit."""
+        cached = self._handles.pop(name, None)
+        if cached is not None:
+            cached[1].drop_views()
+
     def delete_index(self, name: str) -> None:
-        self._handles.pop(name, None)
+        self._forget(name)
         if self.exists(name):
             shutil.rmtree(self._dir(name))

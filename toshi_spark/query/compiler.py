@@ -1,22 +1,40 @@
-"""Query compiler: DSL tree (IR #1) → DataFrame program (IR #2).
+"""Query compiler: DSL tree (IR #1) → one Spark SQL statement (IR #2).
 
 The reference lowers its DSL 1:1 to Tantivy query objects
 (``toshi-server/src/handle.rs:107-121``); all physical smarts live in
-the library.  Here the lowering target is a Catalyst logical plan over
-the postings table, and the physical smarts are Catalyst's: the
-postings filter pushes down to the parquet scan, posting-list
-intersection is a join on doc_id, union is union+groupBy-sum,
-difference is left_anti.
+the library.  Here each search lowers to ONE SQL statement over the
+handle's temp views (``FullTextIndex.view``: postings, row store,
+term dictionary, the doc-sharded copy), and the physical smarts are
+Catalyst's: the postings filter pushes down to the parquet scan,
+posting-list intersection is a join on doc_id, union is UNION ALL +
+GROUP BY sum, difference is a LEFT ANTI join.  One ``spark.sql`` call
+parses and analyzes the statement, where a DataFrame program paid a
+py4j round trip per operator and per column expression.
 
-Index metadata is resolved on the driver before the plan is built, as
-Toshi's reader resolves it from the segment's term dictionary: n_docs
-and avgdl come from the handle, each query term's df from
-``ctx.term_df``, and all of them enter the plan as literals (Catalyst
-folds each term's idf to one constant).  So a term query is one pushed
-postings scan, and no metadata table is joined or broadcast.  Fuzzy
-and regex expansions run as a Spark job over the term dictionary; a
+Index metadata is resolved on the driver before the statement is
+built, as Toshi's reader resolves it from the segment's term
+dictionary: n_docs and avgdl come from the handle, each query term's
+df from ``ctx.term_df``, and all of them enter the statement as
+literals (Catalyst folds each term's idf to one constant), so no
+metadata table is joined or broadcast.  Fuzzy and regex expand on the
+driver from the held dictionary (``expand.py``) when the handle holds
+one and, for regex, when the pattern reads alike in Python and Java;
+otherwise a Spark job over the term dictionary expands them.  A
 bounded expansion becomes a literal ``term IN (…)`` on the postings
-scan, a larger one a semi-join that AQE plans.
+scan, a larger one an IN-subquery that AQE plans as a semi-join.  The
+aggregating shapes (bool fast path, phrase, the fuzzy/regex DISTINCT)
+read Σdf posting rows, which the driver knows: at or under
+``AGG_SINGLE_MAX_ROWS`` the scan is coalesced to one partition, so the
+aggregation plans with no Exchange and the search runs as one job.
+
+Values enter the text only in three forms: a user string as a hex
+literal ``CAST(X'…' AS STRING)`` (Catalyst folds it, so an ``In`` on
+``term`` still pushes to the parquet scan), a number from a typed
+Python value (``repr`` of a float round-trips exactly), and an
+identifier backquoted with its backticks doubled.  Every score is the
+same expression tree, in the same operand order, as the DataFrame
+column path (``scoring.idf_col``/``tf_norm_dyn``), so scores are
+bit-identical to it.
 
 Scoring semantics pinned per clause type (SURVEY.md §2.2):
 
@@ -33,21 +51,20 @@ Scoring semantics pinned per clause type (SURVEY.md §2.2):
             must_not: anti-join; minimum_should_match/boost DROPPED
             (reference quirk, ``boolean.rs:47-61``)
 
-Every compile returns a DataFrame with exactly (doc_id: long,
+Every compiled relation has exactly the columns (doc_id: long,
 score: double).
 """
 
 from __future__ import annotations
 
+import math
 from collections import Counter
-from functools import reduce
-from operator import add
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
+from .. import B, K1
 from ..schema import QueryError
-from ..scoring import idf_col, tf_norm_dyn
 from ..session import bounded_collect
 from .dsl import (
     AllQuery,
@@ -60,6 +77,14 @@ from .dsl import (
     RangeQuery,
     RawQuery,
     RegexQuery,
+    Search,
+)
+from .expand import (
+    _damerau,
+    fuzzy_terms,
+    python_regex,
+    regex_literal_prefix as _regex_literal_prefix,
+    regex_terms,
 )
 
 # a fuzzy/regex expansion at or under both bounds becomes a literal
@@ -67,278 +92,371 @@ from .dsl import (
 EXPANSION_MAX_TERMS = 1024
 EXPANSION_MAX_BYTES = 1 << 20
 
+# an aggregating search that reads at most this many posting rows runs
+# its aggregation in one task (the scan coalesced to one partition: no
+# Exchange, one job); above it the aggregation shuffles on doc_id.
+# Measured on a 4-core box, local[4], a 3-term bool over a parquet
+# catalog index (median ms, single task vs shuffle): 30k rows 224 vs
+# 276, 90k 223 vs 292, 300k 315 vs 409, 450k 679 vs 740, 600k 740 vs
+# 743, 900k 875 vs 614.  The bound sits at half the ~600k crossover.
+AGG_SINGLE_MAX_ROWS = 300_000
+
+# the SQL name of the Damerau shell check of the Spark fuzzy expansion
+_DAMERAU_UDF = "toshi_damerau_within"
+
+_EMPTY = ("SELECT CAST(NULL AS BIGINT) AS doc_id, "
+          "CAST(NULL AS DOUBLE) AS score WHERE FALSE")
+
+
+def sql_str(s: str) -> str:
+    """A string value as SQL text: a hex literal of its UTF-8 bytes."""
+    return f"CAST(X'{s.encode('utf-8', 'surrogatepass').hex()}' AS STRING)"
+
+
+def sql_num(x: int | float) -> str:
+    """A typed Python number as SQL text: an int as an integer literal,
+    a float as a double literal that parses to the same double."""
+    if isinstance(x, int) and not isinstance(x, bool):
+        return str(x)
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    return f"CAST('{x!r}' AS DOUBLE)"
+
+
+def sql_ident(name: str) -> str:
+    """An identifier as SQL text: backquoted, backticks doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _in(col: str, values: list[str]) -> str:
+    if len(values) == 1:
+        return f"{col} = {sql_str(values[0])}"
+    return f"{col} IN ({', '.join(sql_str(v) for v in values)})"
+
+
+def _by_term(pairs: list[tuple[str, str]]) -> str:
+    """``CASE WHEN term = t1 THEN v1 … END`` over (term, SQL value)
+    pairs."""
+    return ("CASE " + " ".join(f"WHEN term = {sql_str(t)} THEN {v}"
+                              for t, v in pairs) + " END")
+
+
+def _idf(n_docs: int, df: int) -> str:
+    """``scoring.idf_col`` over literals."""
+    n, d = sql_num(float(n_docs)), sql_num(float(df))
+    return f"LN(1.0D + ((({n} - {d}) + 0.5D) / ({d} + 0.5D)))"
+
+
+def _tf_norm(tf: str, doc_len: str, avgdl: float) -> str:
+    """``scoring.tf_norm_dyn`` with a literal avgdl."""
+    denom = (f"({tf} + ({sql_num(K1)} * ({sql_num(1.0 - B)} + "
+             f"(({sql_num(B)} * {doc_len}) / {sql_num(avgdl)}))))")
+    return f"(({tf} * {sql_num(K1 + 1.0)}) / {denom})"
+
+
+_DOC_LEN = "CAST(doc_len AS DOUBLE)"
+
 
 class Compiler:
-    """Compiles DSL nodes against one index's tables.
+    """Compiles DSL nodes against one index handle.
 
-    ``ctx`` is the engine (FullTextIndex): postings, doclens, termstats,
-    n_docs, avgdl(field), term_df(field, terms), gates, corpus, schema.
+    ``ctx`` is the engine (FullTextIndex): ``view(kind)``, n_docs,
+    avgdl(field), term_df(field, terms), field_terms(field),
+    doc_bucketed, gates, id_col, schema, spark.
     """
 
     def __init__(self, ctx):
         self.ctx = ctx
 
+    def compile(self, q: Query, search: Search | None = None,
+                stored: list[str] | None = None) -> DataFrame:
+        """``q`` as one statement: its (doc_id, score) relation; with
+        ``search`` the ranked top-k (score, doc_id) of it; with
+        ``stored`` too, that top-k joined to those row-store fields."""
+        text = self.sql(q)
+        if search is not None:
+            text = self.ranked(text, search)
+            if stored is not None:
+                text = self.with_stored(text, stored)
+        return self.ctx.spark.sql(text)
+
+    # ----------------------------------------------------------- ranking
+
+    def ranked(self, rel: str, search: Search) -> str:
+        """The top-k (score, doc_id) of relation ``rel``, ordered score
+        desc, doc_id asc; by a fast u64 field the returned score IS the
+        field value (handle.rs:82-92,127-134), with a silent fallback to
+        the score for any other sort_by."""
+        spec = (self.ctx.schema.get(search.sort_by)
+                if search.sort_by else None)
+        if (spec is not None and spec.fast and spec.stored
+                and spec.ftype == "u64"):
+            rel = (f"SELECT CAST(c.{sql_ident(spec.name)} AS DOUBLE) "
+                   f"AS score, s.doc_id AS doc_id FROM ({rel}) s "
+                   f"JOIN {self.ctx.view('corpus')} c "
+                   f"ON s.doc_id = c.{sql_ident(self.ctx.id_col)}")
+        return (f"SELECT score, doc_id FROM ({rel}) "
+                f"ORDER BY score DESC, doc_id ASC "
+                f"LIMIT {sql_num(int(search.limit))}")
+
+    def with_stored(self, ranked: str, names: list[str]) -> str:
+        """A ranked relation joined to the row store: (score, doc_id,
+        <names>), ordered score desc, doc_id asc."""
+        cols = "".join(f", c.{sql_ident(n)} AS {sql_ident(n)}"
+                       for n in names)
+        return (f"SELECT /*+ BROADCAST(r) */ r.score AS score, "
+                f"r.doc_id AS doc_id{cols} FROM ({ranked}) r "
+                f"JOIN {self.ctx.view('corpus')} c "
+                f"ON r.doc_id = c.{sql_ident(self.ctx.id_col)} "
+                f"ORDER BY r.score DESC, r.doc_id ASC")
+
+    def facet_counts(self, rel: str, field: str, prefix: str,
+                     depth: int) -> str:
+        """(facet_child, value): the matched docs of ``rel`` counted
+        per child path ``depth`` levels deep under ``prefix``."""
+        col = f"c.{sql_ident(field)}"
+        child = (f"concat('/', array_join(slice(split({col}, '/'), 2, "
+                 f"{sql_num(depth)}), '/'))")
+        return (f"SELECT {child} AS facet_child, count(*) AS value "
+                f"FROM ({rel}) s JOIN {self.ctx.view('corpus')} c "
+                f"ON s.doc_id = c.{sql_ident(self.ctx.id_col)} "
+                f"WHERE startswith({col}, {sql_str(prefix + '/')}) "
+                f"GROUP BY 1")
+
     # -------------------------------------------------------------- leafs
 
-    def _postings_for_terms(self, field: str, terms: list[str]) -> DataFrame:
-        # multi-term scans feed a doc_id intersection/union — when the
-        # index carries a doc-sharded postings copy (index/bucketed.py)
-        # the bucketed scan satisfies that grouping's distribution and
-        # the corpus-scale Exchange disappears.  Single-term lookups
-        # stay on the (field, term)-sorted layout, which prunes harder.
-        docb = getattr(self.ctx, "doc_bucketed", None)
+    def _scan(self, field: str, terms: list[str], cols: str,
+              hint: str = "") -> str:
+        """The posting rows of ``terms`` in ``field``.  Multi-term
+        scans feed a doc_id intersection/union: when the index carries
+        a doc-sharded postings copy (index/bucketed.py) the bucketed
+        scan satisfies that grouping's distribution and the corpus-scale
+        Exchange disappears.  Single-term lookups stay on the
+        (field, term)-sorted layout, which prunes harder."""
+        docb = self.ctx.doc_bucketed
+        where = f"field = {sql_str(field)}"
         if docb is not None and len(terms) > 1:
-            return docb.postings_for_terms(field, terms)
-        p = self.ctx.postings
-        cond = F.col("field") == field
-        if len(terms) == 1:
-            tcond = F.col("term") == terms[0]
+            view = self.ctx.view("docb")
+            bkts = ", ".join(sql_num(b) for b in docb.buckets(terms))
+            where += f" AND term_bkt IN ({bkts})"
         else:
-            tcond = F.col("term").isin(terms)
-        return p.filter(cond & tcond)
+            view = self.ctx.view("postings")
+        return (f"SELECT {hint}{cols} FROM {view} "
+                f"WHERE {where} AND {_in('term', terms)}")
 
-    def _empty(self) -> DataFrame:
-        return self.ctx.spark.createDataFrame([], "doc_id long, score double")
+    def _agg_hint(self, n_rows: int | None) -> str:
+        """The scan hint of an aggregating search that reads ``n_rows``
+        posting rows (None: not known on the driver)."""
+        if n_rows is not None and n_rows <= AGG_SINGLE_MAX_ROWS:
+            self.ctx.gates["agg"] = "single"
+            return "/*+ COALESCE(1) */ "
+        self.ctx.gates["agg"] = "shuffle"
+        return ""
 
-    def _with_doc_len(self, p: DataFrame) -> DataFrame:
-        if "doc_len" in p.columns:  # inline fieldnorm: no doclens join
-            return p
-        return p.join(self.ctx.doclens, ["field", "doc_id"])
-
-    def _bm25(self, field: str, dfs: dict[str, int], tf: Column) -> Column:
+    def _bm25(self, field: str, dfs: dict[str, int], tf: str) -> str:
         """Per-posting BM25 over literal metadata: each term's idf is a
-        constant expression Catalyst folds with the column path's
-        arithmetic (a CASE over ``term`` when there are several)."""
-        idfs = [(t, idf_col(self.ctx.n_docs, F.lit(df).cast("double")))
-                for t, df in sorted(dfs.items())]
+        constant expression Catalyst folds (a CASE over ``term`` when
+        there are several)."""
+        idfs = [(t, _idf(self.ctx.n_docs, df)) for t, df in sorted(dfs.items())]
         idf = idfs[0][1] if len(idfs) == 1 else _by_term(idfs)
-        return idf * tf_norm_dyn(tf, F.col("doc_len").cast("double"),
-                                 F.lit(self.ctx.avgdl(field)))
+        return f"({idf} * {_tf_norm(tf, _DOC_LEN, self.ctx.avgdl(field))})"
 
-    def compile_term(self, q: ExactTerm) -> DataFrame:
+    def _term(self, q: ExactTerm) -> str:
         self.ctx.schema.require_indexed(q.field)
         # query value used verbatim (Term::from_field_text, mod.rs:221)
         dfs = self.ctx.term_df(q.field, [q.value])
         if not dfs:
-            return self._empty()
+            return _EMPTY
         # Basic record option: tf treated as 1; one posting row per doc,
         # so no aggregation
-        p = self._with_doc_len(self._postings_for_terms(q.field, [q.value]))
-        return p.select(
-            "doc_id", self._bm25(q.field, dfs, F.lit(1.0)).alias("score")
-        )
+        return self._scan(
+            q.field, [q.value],
+            f"doc_id, {self._bm25(q.field, dfs, '1.0D')} AS score")
 
-    def compile_phrase(self, q: PhraseQuery) -> DataFrame:
+    def _phrase(self, q: PhraseQuery) -> str:
         q.validate()
         self.ctx.schema.require_indexed(q.field)
         offsets = q.offsets if q.offsets is not None else list(range(len(q.terms)))
         counts = Counter(q.terms)
         dfs = self.ctx.term_df(q.field, list(counts))
         if len(dfs) < len(counts):
-            return self._empty()  # a term no doc holds: no match
-        has_inline_len = "doc_len" in self.ctx.postings.columns
-        # ONE pushed scan over the phrase's distinct terms + ONE shuffle
-        # (groupBy doc_id → term→positions map).  The previous plan
-        # joined P per-term legs on doc_id — P-1 shuffles of the same
-        # posting rows; at crawl scale the phrase cost IS those
-        # shuffles, so the single-aggregation shape is the 100 TB plan.
-        distinct_terms = list(dict.fromkeys(q.terms))
-        p = self._postings_for_terms(q.field, distinct_terms)
-        cols = ["doc_id", "term", "positions"]
-        aggs = [
-            F.map_from_entries(
-                F.collect_list(F.struct("term", "positions"))
-            ).alias("pos"),
-            F.count("term").alias("n_present"),
-        ]
-        if has_inline_len:
-            # inline fieldnorm rides along: no doclens join
-            cols.append("doc_len")
-            aggs.append(F.first("doc_len").alias("doc_len"))
+            return _EMPTY  # a term no doc holds: no match
+        # ONE pushed scan over the phrase's distinct terms + ONE
+        # aggregation (GROUP BY doc_id → term→positions map); the inline
+        # doc_len rides along.  Joining one leg per term on doc_id
+        # would shuffle the same posting rows P-1 times.
+        distinct = list(dict.fromkeys(q.terms))
+        scan = self._scan(q.field, distinct, "doc_id, term, positions, doc_len",
+                          self._agg_hint(sum(dfs.values())))
         grouped = (
-            p.select(*cols)
-            .groupBy("doc_id")
-            .agg(*aggs)
-            .filter(F.col("n_present") == len(distinct_terms))
-        )
+            "SELECT doc_id, map_from_entries(collect_list("
+            "struct(term, positions))) AS pos, count(term) AS n_present, "
+            f"first(doc_len) AS doc_len FROM ({scan}) GROUP BY doc_id")
         # anchor on term 0: phrase matches at p iff term_i sits at
         # p - offsets[0] + offsets[i] for all i (Tantivy
         # PhraseQuery::new_with_offset semantics, phrase.rs:58-71)
-        deltas = [(q.terms[i], offsets[i] - offsets[0])
-                  for i in range(1, len(q.terms))]
+        anchor = " AND ".join(
+            f"array_contains(pos[{sql_str(q.terms[i])}], "
+            f"p + {sql_num(offsets[i] - offsets[0])})"
+            for i in range(1, len(q.terms)))
+        tf = f"size(filter(pos[{sql_str(q.terms[0])}], p -> {anchor}))"
+        matched = (f"SELECT doc_id, tf, doc_len FROM (SELECT doc_id, "
+                   f"{tf} AS tf, doc_len FROM ({grouped}) "
+                   f"WHERE n_present = {sql_num(len(distinct))}) "
+                   f"WHERE tf > 0")
+        # Tantivy's PhraseQuery uses a multi-term BM25 weight: idf
+        # summed over the phrase terms (with multiplicity), tf = phrase
+        # frequency; the sum is a constant expression
+        idf_sum = ""
+        for t, c in sorted(counts.items()):
+            part = f"({_idf(self.ctx.n_docs, dfs[t])} * {sql_num(float(c))})"
+            idf_sum = part if not idf_sum else f"({idf_sum} + {part})"
+        score = (f"({idf_sum} * "
+                 f"{_tf_norm('CAST(tf AS DOUBLE)', _DOC_LEN, self.ctx.avgdl(q.field))})")
+        return f"SELECT doc_id, {score} AS score FROM ({matched})"
 
-        def anchor_matches(pp):
-            cond = None
-            for term_i, d in deltas:
-                c = F.array_contains(
-                    F.col("pos").getItem(term_i), pp + F.lit(d)
-                )
-                cond = c if cond is None else (cond & c)
-            return cond
+    # ------------------------------------------------------ fuzzy, regex
 
-        phrase_tf = F.size(
-            F.filter(F.col("pos").getItem(q.terms[0]), anchor_matches)
-        )
-        keep = [F.lit(q.field).alias("field"), "doc_id", "tf"]
-        if has_inline_len:
-            keep.append("doc_len")
-        matched = (
-            grouped.withColumn("tf", phrase_tf)
-            .filter(F.col("tf") > 0)
-            .select(*keep)
-        )
-        # Phrase scoring: Tantivy's PhraseQuery uses a multi-term BM25
-        # weight — idf summed over the phrase terms (with multiplicity),
-        # tf = phrase frequency; the sum is a constant expression
-        idf_sum = reduce(add, [
-            idf_col(self.ctx.n_docs, F.lit(dfs[t]).cast("double"))
-            * F.lit(float(c))
-            for t, c in sorted(counts.items())
-        ])
-        scored = self._with_doc_len(matched).withColumn(
-            "score",
-            idf_sum * tf_norm_dyn(
-                F.col("tf").cast("double"),
-                F.col("doc_len").cast("double"),
-                F.lit(self.ctx.avgdl(q.field)),
-            ),
-        )
-        return scored.select("doc_id", "score")
+    def _expanded(self, field: str, driver, spark_pred: str) -> str:
+        """Automaton-query scoring: every doc holding a matching term
+        scores 1.0.
 
-    def _expand_dict(self, field: str, term_pred: Column) -> DataFrame:
-        """Term-dictionary expansion → matching terms for this field."""
-        d = self.ctx.termstats.filter(F.col("field") == field).filter(term_pred)
-        return d.select("field", "term")
-
-    def _const_score_for_terms(self, field: str,
-                               expanded: DataFrame) -> DataFrame:
-        """Automaton-query scoring: every matching doc scores 1.0.
-
-        A bounded expansion is pushed into the postings scan as a
-        literal term list; above the bounds the postings semi-join the
-        expansion and AQE picks the join strategy."""
-        rows = bounded_collect(expanded.select("term"),
-                               EXPANSION_MAX_TERMS, EXPANSION_MAX_BYTES)
-        if rows is None:
+        ``driver(FieldTerms)`` expands on the driver (None: this pattern
+        cannot); ``spark_pred`` is the same test as a SQL predicate on
+        the term dictionary's ``term``.  A bounded expansion is pushed
+        into the postings scan as a literal term list; above the bounds
+        the postings semi-join the dictionary rows ``spark_pred``
+        selects, and AQE picks the join strategy."""
+        ft = self.ctx.field_terms(field)
+        terms = driver(ft) if ft is not None else None
+        fq = sql_str(field)
+        if terms is not None:
+            dfs = [self.ctx.term_dict[(field, t)] for t in terms]
+            size = sum(len(t.encode()) + len(str(d))
+                       for t, d in zip(terms, dfs))
+            bounded = (len(terms) <= EXPANSION_MAX_TERMS
+                       and size <= EXPANSION_MAX_BYTES)
+            self.ctx.gates["expansion_source"] = ("driver" if bounded
+                                                  else "spark")
+        else:
+            self.ctx.gates["expansion_source"] = "spark"
+            rows = bounded_collect(
+                self.ctx.spark.sql(
+                    f"SELECT term, df FROM {self.ctx.view('termstats')} "
+                    f"WHERE field = {fq} AND {spark_pred}"),
+                EXPANSION_MAX_TERMS, EXPANSION_MAX_BYTES)
+            bounded = rows is not None
+            if bounded:
+                terms = [r["term"] for r in rows]
+                dfs = [int(r["df"]) for r in rows]
+        if not bounded:
             self.ctx.gates["expansion"] = "semi_join"
-            matched = self.ctx.postings.join(
-                expanded, ["field", "term"], "left_semi"
-            )
+            hint = self._agg_hint(None)
+            dictionary = (f"SELECT term FROM {self.ctx.view('termstats')} "
+                          f"WHERE field = {fq} AND {spark_pred}")
+            scan = (f"SELECT {hint}doc_id FROM {self.ctx.view('postings')} "
+                    f"WHERE field = {fq} AND term IN ({dictionary})")
         else:
             self.ctx.gates["expansion"] = "literal"
-            if not rows:
-                return self._empty()
-            matched = self._postings_for_terms(
-                field, sorted(r["term"] for r in rows)
-            )
-        return matched.select("doc_id").distinct().withColumn(
-            "score", F.lit(1.0)
-        )
+            if not terms:
+                return _EMPTY
+            scan = self._scan(field, sorted(terms), "doc_id",
+                              self._agg_hint(sum(dfs)))
+        return f"SELECT doc_id, 1.0D AS score FROM ({scan}) GROUP BY doc_id"
 
-    def compile_fuzzy(self, q: FuzzyQuery) -> DataFrame:
+    def _fuzzy(self, q: FuzzyQuery) -> str:
         self.ctx.schema.require_indexed(q.field)
-        if q.distance == 0:
+        value, dist = q.value, q.distance
+
+        def driver(ft):
+            return fuzzy_terms(ft, value, dist, q.transposition)
+
+        if dist == 0:
             # Levenshtein distance 0 ≡ exact term: the equality pushes
             # all the way to the parquet scan (no dictionary sweep)
-            return self._const_score_for_terms(
-                q.field, self._expand_dict(q.field, F.col("term") == q.value)
-            )
+            return self._expanded(q.field, driver,
+                                  f"term = {sql_str(value)}")
         # cheap columnar prefilter: |len(term) − len(value)| ≤ d holds
         # for every term within edit distance d — prunes the dictionary
         # before the (expensive) edit-distance evaluation
-        len_pred = F.length(F.col("term")).between(
-            len(q.value) - q.distance, len(q.value) + q.distance
-        )
+        lev = f"levenshtein(term, {sql_str(value)})"
+        pred = (f"length(term) BETWEEN {sql_num(len(value) - dist)} "
+                f"AND {sql_num(len(value) + dist)}")
         if not q.transposition:
-            pred = len_pred & (
-                F.levenshtein(F.col("term"), F.lit(q.value)) <= q.distance
-            )
-            expanded = self._expand_dict(q.field, pred)
-        elif q.distance == 1:
-            # Damerau at distance 1 is FULLY JVM-expressible: dam ≤ 1
+            pred += f" AND {lev} <= {sql_num(dist)}"
+        elif dist == 1:
+            # Damerau at distance 1 is fully JVM-expressible: dam ≤ 1
             # ⇔ lev ≤ 1 OR the term is the value with one adjacent
-            # transposition — and the query value is a literal, so its
-            # ≤len-1 swap variants enumerate driver-side.  No Python
-            # worker in the plan (the pandas-UDF spin-up, not the rows,
-            # was the cost of the fuzzy~1 path: 1.5 s vs 0.6 s for the
-            # plain-Levenshtein twin at sf0.1).
-            value = q.value
+            # transposition, enumerated here from the literal value
             swaps = sorted({
                 value[:i] + value[i + 1] + value[i] + value[i + 2:]
                 for i in range(len(value) - 1)
                 if value[i] != value[i + 1]
             })
-            pred = F.levenshtein(F.col("term"), F.lit(value)) <= 1
+            inner = f"{lev} <= 1"
             if swaps:
-                pred = pred | F.col("term").isin(swaps)
-            expanded = self._expand_dict(q.field, len_pred & pred)
+                inner = f"({inner} OR {_in('term', swaps)})"
+            pred += f" AND {inner}"
         else:
-            # Damerau-Levenshtein at distance 2 (Lucene's cap): no
-            # Spark built-in, but dam(t,v) ≤ d ⇒ lev(t,v) ≤ 2d (a
-            # transposition is at most two plain edits), so the JVM
-            # levenshtein bounds the sweep — and terms with lev ≤ d are
-            # already within (dam ≤ lev) without any Python check.  The
-            # Arrow-batched pandas UDF only adjudicates the d < lev ≤ 2d
-            # shell, a handful of terms instead of the length-band slice
-            # of the dictionary.
-            value, dist = q.value, q.distance
-            lev = F.levenshtein(F.col("term"), F.lit(value))
-            candidates = self._expand_dict(
-                q.field, len_pred & (lev <= 2 * dist)
-            )
+            # Damerau-Levenshtein at distance ≥ 2: dam(t,v) ≤ d ⇒
+            # lev(t,v) ≤ 2d (a transposition is at most two plain
+            # edits), so the JVM levenshtein bounds the sweep, terms
+            # with lev ≤ d are within without a Python check, and the
+            # Arrow-batched UDF only judges the d < lev ≤ 2d shell
+            _register_damerau(self.ctx.spark)
+            pred += (f" AND {lev} <= {sql_num(2 * dist)} AND ({lev} <= "
+                     f"{sql_num(dist)} OR {_DAMERAU_UDF}(term, "
+                     f"{sql_str(value)}, {sql_num(dist)}))")
+        return self._expanded(q.field, driver, pred)
 
-            @F.pandas_udf("boolean")
-            def within(terms: pd.Series) -> pd.Series:
-                return terms.map(lambda t: _damerau(t, value, dist) <= dist)
-
-            expanded = candidates.filter(
-                (lev <= dist) | within(F.col("term"))
-            )
-        return self._const_score_for_terms(q.field, expanded)
-
-    def compile_regex(self, q: RegexQuery) -> DataFrame:
+    def _regex(self, q: RegexQuery) -> str:
         q.validate()
         self.ctx.schema.require_indexed(q.field)
         # Tantivy regex-automaton matches the ENTIRE term (regex.rs:28-36)
-        pred = F.col("term").rlike(f"^(?:{q.pattern})$")
+        pred = f"term RLIKE {sql_str(f'^(?:{q.pattern})$')}"
         # the automaton's cheap cousin: a literal regex prefix becomes a
-        # term RANGE predicate that parquet min/max stats can prune on
-        # the (sorted) dictionary — e.g. "qu.*" → 'qu' ≤ term < 'qv'
+        # term RANGE, a bisect of the driver's sorted terms or a
+        # predicate parquet min/max stats prune the sorted dictionary on
+        # — e.g. "qu.*" → 'qu' ≤ term < 'qv'
         prefix = _regex_literal_prefix(q.pattern)
         if prefix:
-            pred = (F.col("term") >= prefix) & pred
+            pred = f"term >= {sql_str(prefix)} AND {pred}"
             last = prefix[-1]
             if ord(last) < 0x10FFFF:
                 upper = prefix[:-1] + chr(ord(last) + 1)
-                pred = (F.col("term") < upper) & pred
-        return self._const_score_for_terms(
-            q.field, self._expand_dict(q.field, pred)
-        )
+                pred = f"term < {sql_str(upper)} AND {pred}"
+        rx = python_regex(q.pattern)
 
-    def compile_range(self, q: RangeQuery) -> DataFrame:
+        def driver(ft):
+            return None if rx is None else regex_terms(ft, rx, prefix)
+
+        return self._expanded(q.field, driver, pred)
+
+    # ------------------------------------------------------ range, all
+
+    def _range(self, q: RangeQuery) -> str:
         spec = self.ctx.schema.require_indexed(q.field)
         lower, lower_incl, upper, upper_incl = q.bounds_for(spec.ftype)
-        col = F.col(q.field)
-        cond = F.lit(True)
+        col = sql_ident(q.field)
+        conds = []
         if lower is not None:
-            cond = cond & (col >= lower if lower_incl else col > lower)
+            conds.append(f"{col} {'>=' if lower_incl else '>'} "
+                         f"{sql_num(lower)}")
         if upper is not None:
-            cond = cond & (col <= upper if upper_incl else col < upper)
+            conds.append(f"{col} {'<=' if upper_incl else '<'} "
+                         f"{sql_num(upper)}")
         # native typed predicate → Catalyst pushes to the parquet scan
-        return (
-            self.ctx.corpus.filter(cond)
-            .select(F.col(self.ctx.id_col).alias("doc_id"))
-            .withColumn("score", F.lit(1.0))
-        )
+        where = f" WHERE {' AND '.join(conds)}" if conds else ""
+        return self._all() + where
 
-    def compile_all(self, _q: AllQuery) -> DataFrame:
-        return self.ctx.corpus.select(
-            F.col(self.ctx.id_col).alias("doc_id")
-        ).withColumn("score", F.lit(1.0))
+    def _all(self) -> str:
+        return (f"SELECT {sql_ident(self.ctx.id_col)} AS doc_id, "
+                f"1.0D AS score FROM {self.ctx.view('corpus')}")
 
     # ------------------------------------------------------------ boolean
 
-    def _compile_bool_terms_fast(self, q: BoolQuery) -> DataFrame | None:
+    def _compile_bool_terms_fast(self, q: BoolQuery) -> str | None:
         """Single-scan plan for the all-term-clauses boolean (the common
         shape).  The general path scans postings once per clause and
         joins; when every clause is an ExactTerm on one field, the whole
@@ -346,8 +464,8 @@ class Compiler:
 
             filter term ∈ all-clause-terms
             → per-(doc,term) basic BM25 part (literal idf per term)
-            → groupBy(doc): score = Σ weight·part,
-              matched-must distinct count, must_not flag
+            → GROUP BY doc: score = Σ weight·part,
+              matched-must count, must_not flag
             → filter must-complete ∧ ¬must_not
 
         The weights (clause multiplicity) and the must/not/should flags
@@ -373,154 +491,103 @@ class Compiler:
             field, sorted(set(must_c) | set(should_c) | not_set)
         )
         if not dfs:
-            return self._empty()
-        term = F.col("term")
+            return _EMPTY
 
-        def flag(terms) -> Column:
+        def flag(terms) -> str:
             terms = sorted(terms)
-            return F.when(term.isin(terms), 1).otherwise(0) if terms \
-                else F.lit(0)
+            return (f"CASE WHEN term IN ({', '.join(map(sql_str, terms))})"
+                    f" THEN 1 ELSE 0 END" if terms else "0")
 
-        w = _by_term([(t, float(must_c[t] + should_c[t]))
+        w = _by_term([(t, sql_num(float(must_c[t] + should_c[t])))
                       for t in sorted(dfs)])
-        p = self._with_doc_len(self._postings_for_terms(field, sorted(dfs)))
-        part = self._bm25(field, dfs, F.lit(1.0))
-        agg = p.groupBy("doc_id").agg(
-            F.sum(part * w).alias("score"),
-            # posting rows are unique per (term, doc), so a conditional
-            # SUM equals the distinct must-term count — count_distinct
-            # here would plan a second shuffle (two-phase distinct agg),
-            # doubling the query's exchange cost at scale
-            F.sum(flag(must_c)).alias("n_must"),
-            F.max(flag(not_set)).alias("excluded"),
-            F.max(flag(should_c)).alias("has_should"),
-        )
-        cond = F.col("excluded") == 0
+        scan = self._scan(field, sorted(dfs), "doc_id, term, doc_len",
+                          self._agg_hint(sum(dfs.values())))
+        part = self._bm25(field, dfs, "1.0D")
+        # posting rows are unique per (term, doc), so a conditional SUM
+        # equals the distinct must-term count — a COUNT(DISTINCT) here
+        # would plan a second shuffle (two-phase distinct aggregation)
+        agg = (f"SELECT doc_id, SUM({part} * {w}) AS score, "
+               f"SUM({flag(must_c)}) AS n_must, "
+               f"MAX({flag(not_set)}) AS excluded, "
+               f"MAX({flag(should_c)}) AS has_should "
+               f"FROM ({scan}) GROUP BY doc_id")
+        cond = "excluded = 0"
         if must_c:
-            cond = cond & (F.col("n_must") == len(must_c))
+            cond += f" AND n_must = {sql_num(len(must_c))}"
         else:
-            cond = cond & (F.col("has_should") == 1)
-        return agg.filter(cond).select("doc_id", "score")
+            cond += " AND has_should = 1"
+        return f"SELECT doc_id, score FROM ({agg}) WHERE {cond}"
 
-    def compile_bool(self, q: BoolQuery) -> DataFrame:
+    def _bool(self, q: BoolQuery) -> str:
         q.validate()
         fast = self._compile_bool_terms_fast(q)
         if fast is not None:
             return fast
-        musts = [self.compile(c) for c in q.must]
-        shoulds = [self.compile(c) for c in q.should]
-        must_nots = [self.compile(c) for c in q.must_not]
+        musts = [self.sql(c) for c in q.must]
+        shoulds = [self.sql(c) for c in q.should]
+        must_nots = [self.sql(c) for c in q.must_not]
 
-        base: DataFrame | None = None
-        if musts:
-            base = musts[0]
-            for m in musts[1:]:
-                # posting-list intersection = inner join on doc_id
-                base = (
-                    base.join(m.withColumnRenamed("score", "s2"), "doc_id")
-                    .withColumn("score", F.col("score") + F.col("s2"))
-                    .drop("s2")
-                )
-
+        base = musts[0] if musts else None
+        for m in musts[1:]:
+            # posting-list intersection = inner join on doc_id
+            base = (f"SELECT a.doc_id AS doc_id, a.score + b.score AS score "
+                    f"FROM ({base}) a JOIN ({m}) b ON a.doc_id = b.doc_id")
         if shoulds:
-            s_union = reduce(lambda a, b: a.unionByName(b), shoulds)
-            s_sum = s_union.groupBy("doc_id").agg(F.sum("score").alias("s2"))
+            union = " UNION ALL ".join(f"SELECT doc_id, score FROM ({s})"
+                                       for s in shoulds)
+            s_sum = (f"SELECT doc_id, SUM(score) AS score FROM ({union}) "
+                     f"GROUP BY doc_id")
             if base is None:
-                base = s_sum.withColumnRenamed("s2", "score")
+                base = s_sum
             else:
-                base = (
-                    base.join(s_sum, "doc_id", "left")
-                    .withColumn(
-                        "score", F.col("score") + F.coalesce(F.col("s2"), F.lit(0.0))
-                    )
-                    .drop("s2")
-                )
-
+                base = (f"SELECT a.doc_id AS doc_id, a.score + "
+                        f"coalesce(b.score, 0.0D) AS score FROM ({base}) a "
+                        f"LEFT JOIN ({s_sum}) b ON a.doc_id = b.doc_id")
         if base is None:
             # no positive clause → empty result (Tantivy: no scorer)
-            return self._empty()
-
+            return _EMPTY
         for mn in must_nots:
-            base = base.join(mn.select("doc_id"), "doc_id", "left_anti")
+            base = (f"SELECT a.doc_id AS doc_id, a.score AS score "
+                    f"FROM ({base}) a LEFT ANTI JOIN ({mn}) b "
+                    f"ON a.doc_id = b.doc_id")
         return base
 
     # ----------------------------------------------------------- dispatch
 
-    def compile(self, q: Query) -> DataFrame:
+    def sql(self, q: Query) -> str:
+        """``q`` as the SQL text of its (doc_id, score) relation."""
         if isinstance(q, ExactTerm):
-            return self.compile_term(q)
+            return self._term(q)
         if isinstance(q, PhraseQuery):
-            return self.compile_phrase(q)
+            return self._phrase(q)
         if isinstance(q, FuzzyQuery):
-            return self.compile_fuzzy(q)
+            return self._fuzzy(q)
         if isinstance(q, RegexQuery):
-            return self.compile_regex(q)
+            return self._regex(q)
         if isinstance(q, RangeQuery):
-            return self.compile_range(q)
+            return self._range(q)
         if isinstance(q, BoolQuery):
-            return self.compile_bool(q)
+            return self._bool(q)
         if isinstance(q, AllQuery):
-            return self.compile_all(q)
+            return self._all()
         if isinstance(q, BoostQuery):
             # Tantivy BoostQuery: multiply the inner scorer's score
-            return self.compile(q.inner).withColumn(
-                "score", F.col("score") * F.lit(float(q.boost))
-            )
+            return (f"SELECT doc_id, score * {sql_num(float(q.boost))} "
+                    f"AS score FROM ({self.sql(q.inner)})")
         if isinstance(q, RawQuery):
             from .raw import parse_raw
 
-            return self.compile(parse_raw(q.raw, self.ctx.schema))
+            return self.sql(parse_raw(q.raw, self.ctx.schema))
         raise QueryError(f"Unsupported query type: {type(q).__name__}")
 
 
-def _by_term(pairs: list[tuple[str, Column | float]]) -> Column:
-    """``CASE term WHEN t1 THEN v1 … END`` over literal (term, value)
-    pairs (``F.when`` opens the CASE, ``Column.when`` extends it)."""
-    return reduce(lambda c, tv: c.when(F.col("term") == tv[0], tv[1]),
-                  pairs, F)
+def _damerau_within(terms: pd.Series, values: pd.Series,
+                    dists: pd.Series) -> pd.Series:
+    return pd.Series([_damerau(t, v, d) <= d
+                      for t, v, d in zip(terms, values, dists)])
 
 
-_REGEX_META = set(".^$*+?{}[]|()\\")
-
-
-def _regex_literal_prefix(pattern: str) -> str:
-    """Longest literal prefix of a regex (chars before any metachar).
-
-    Conservative: stops at the first metacharacter and drops the last
-    literal char if the NEXT token could make it optional/repeated
-    (e.g. "ab?" must not assume 'b').  A pattern containing '|'
-    anywhere gets NO prefix: a top-level alternation means the scanned
-    literal only prefixes the FIRST branch ("w1|w2|w3" must still
-    match w2), and distinguishing top-level from grouped pipes isn't
-    worth the parse — the pushdown is an optimization, never a filter.
-    """
-    if "|" in pattern:
-        return ""
-    out: list[str] = []
-    i = 0
-    n = len(pattern)
-    while i < n and pattern[i] not in _REGEX_META:
-        out.append(pattern[i])
-        i += 1
-    if i < n and pattern[i] in "?*{" and out:
-        out.pop()  # the preceding literal may repeat zero times
-    return "".join(out)
-
-
-def _damerau(a: str, b: str, cap: int) -> int:
-    """Restricted Damerau-Levenshtein with early exit above ``cap``."""
-    if abs(len(a) - len(b)) > cap:
-        return cap + 1
-    prev2: list[int] = []
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i] + [0] * len(b)
-        for j, cb in enumerate(b, 1):
-            cost = 0 if ca == cb else 1
-            cur[j] = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + cost)
-            if i > 1 and j > 1 and ca == b[j - 2] and a[i - 2] == cb:
-                cur[j] = min(cur[j], prev2[j - 2] + cost)
-        prev2, prev = prev, cur
-        if min(prev) > cap:
-            return cap + 1
-    return prev[len(b)]
+def _register_damerau(spark) -> None:
+    if not spark.catalog.functionExists(_DAMERAU_UDF):
+        spark.udf.register(_DAMERAU_UDF,
+                           F.pandas_udf(_damerau_within, "boolean"))

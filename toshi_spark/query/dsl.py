@@ -75,9 +75,22 @@ class RegexQuery(Query):
     pattern: str
 
     def validate(self) -> None:
+        """Compile the pattern in the dialect that runs it: Spark's
+        ``rlike`` of ``^(?:pattern)$`` uses ``java.util.regex``, so the
+        pattern is compiled there (a few py4j calls, no Spark job).  With
+        no JVM running, Python's ``re`` stands in."""
+        from py4j.protocol import Py4JJavaError
+        from pyspark import SparkContext
+        from pyspark.errors.exceptions.captured import CapturedException
+
+        sc = SparkContext._active_spark_context
         try:
-            _re.compile(self.pattern)
-        except _re.error as e:
+            if sc is None:
+                _re.compile(self.pattern)
+            else:
+                sc._jvm.java.util.regex.Pattern.compile(
+                    f"^(?:{self.pattern})$")
+        except (_re.error, Py4JJavaError, CapturedException) as e:
             raise QueryError(f"An invalid regex was passed: {self.pattern}") from e
 
 
