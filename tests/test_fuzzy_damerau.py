@@ -3,7 +3,8 @@
 distance=1 compiles to pure JVM column algebra (lev ≤ 1 OR literal
 adjacent-swap set — no Python worker in the plan); distance=2 keeps
 the Arrow UDF but only over the d < lev ≤ 2d shell.  Both must agree
-exactly with a brute-force Damerau oracle over the term dictionary.
+exactly with a brute-force Damerau oracle over the term dictionary, and
+so must the driver expansion (query/expand.py) at every distance.
 """
 
 import pytest
@@ -84,3 +85,26 @@ def test_distance2_keeps_udf_on_shell_only(ix, monkeypatch):
     # the search itself scans a literal term list: no Python worker
     assert "ArrowEvalPython" not in search_plan
     assert "PythonUDF" not in search_plan
+
+
+def test_driver_expansion_matches_pairwise_reference():
+    """The driver's banded numpy DP selects, at every distance with and
+    without transpositions, exactly the terms the pairwise Python DPs
+    (``_damerau``, and the oracle's Levenshtein) put within it."""
+    import random
+
+    from oracle_bm25 import _levenshtein
+    from toshi_spark.query.expand import FieldTerms, fuzzy_terms
+
+    rng = random.Random(7)
+    alpha = "abcé\U0001f600"
+    terms = sorted({"".join(rng.choices(alpha, k=rng.randint(1, 6)))
+                    for _ in range(600)})
+    ft = FieldTerms(terms)
+    for _ in range(60):
+        v = "".join(rng.choices(alpha, k=rng.randint(1, 6)))
+        for d in (1, 2, 3):
+            for tr in (False, True):
+                want = [t for t in terms if (_damerau(t, v, d) if tr
+                                             else _levenshtein(t, v)) <= d]
+                assert fuzzy_terms(ft, v, d, tr) == want, (v, d, tr)

@@ -43,7 +43,7 @@ TERMS = [
     "\U0001f600", "a\U0001f600", "\U0001f600b", "\U0001f600\U0001f601",
     "\u00e9", "e\u0301", "\u00e9b", "e\u0301e", "caf\u00e9", "cafe\u0301",
     "a.b", "a*b", "a b", "Ab", "AB", "\u65e5\u672c", "\u65e5\u672c\u8a9e",
-    "w10", "w1", "w19",
+    "w10", "w1", "w19", "abcdef",
 ]
 
 REGEXES = [
@@ -60,6 +60,11 @@ REGEXES = [
 FUZZY = [(v, d, tr) for v in ("ab", "a", "\u00e9", "e\u0301", "\U0001f600",
                               "ab\n", "caf", "w1", "ba")
          for d in (0, 1, 2) for tr in (False, True)]
+# values a few adjacent swaps from a term that plain Levenshtein puts
+# beyond the distance: "abcd" is 2 swaps (3 plain edits) from "badc",
+# "abcdef" 3 swaps (4 plain edits) from "badcfe"
+SWAPS = [("badc", 2, "abcd"), ("badcfe", 3, "abcdef")]
+FUZZY += [(v, d, tr) for v, d, _t in SWAPS for tr in (False, True)]
 
 
 def _bodies(field: str, n: str, v: str, i: int) -> list[dict]:
@@ -122,6 +127,9 @@ def test_driver_and_spark_expansions_select_the_same_terms(
     assert "ab\r\n" in driver[REGEXES.index("ab")]
     assert "ab\n\n" not in driver[REGEXES.index("ab.")]
     assert all(len(f) > 0 for f in driver[:20])
+    for v, d, t in SWAPS:
+        i = len(REGEXES) + FUZZY.index((v, d, True))
+        assert t in driver[i] and t not in driver[i - 1], (v, d)
 
     monkeypatch.setattr(catalog_mod, "TERM_DICT_MAX_ROWS", 1)
     pushed, sources2 = _sweep(spark, raw_base)

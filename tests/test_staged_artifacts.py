@@ -168,3 +168,26 @@ def test_mix_selected_artifact_matches_live_filters(spark):
         .join(keep_c, "doc_id")
     )
     assert rows(art.select("doc_id")) == rows(live.select("doc_id"))
+
+
+def test_release_drops_index_temp_views(spark):
+    """A searched index artifact's temp views go with the artifact:
+    they hold its plans, so a release that left them would keep those
+    plans for the life of the session."""
+    from toshi_spark.queries import get_index
+
+    def ix_views():
+        return {t.name for t in spark.catalog.listTables()
+                if t.name.startswith("toshi_ix")}
+
+    release_session_artifacts(spark)
+    before = ix_views()
+    ix = get_index(spark, SF)
+    res = ix.search_json({"query": {"term": {"text": "spark"}}, "limit": 5})
+    assert res.hits > 0
+    names = set(ix.view_names())
+    assert names and names <= ix_views()
+    release_session_artifacts(spark)
+    assert not ix.view_names()
+    assert not names & ix_views()
+    assert ix_views() <= before

@@ -35,7 +35,6 @@ import re
 from collections.abc import Iterator
 
 import numpy as _np
-import pandas as pd
 
 TOKEN_BYTE_LIMIT = 40  # Tantivy RemoveLongFilter::limit(40)
 # max token bytes one vectorized-kernel call may compact (int32 Arrow
@@ -777,22 +776,6 @@ def analyze_arrow_batches(
             ],
             schema=out_schema,
         )
-
-
-def analyze_partition(
-    batches: Iterator[pd.DataFrame],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    field: str = "text",
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas-compatible wrapper over the Arrow kernel (tests)."""
-    import pyarrow as pa
-
-    for pdf in batches:
-        for rb in analyze_arrow_batches(
-            [pa.RecordBatch.from_pandas(pdf)], id_col, text_col, field
-        ):
-            yield rb.to_pandas()
 
 
 ANALYZE_SCHEMA = (

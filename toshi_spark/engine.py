@@ -74,7 +74,15 @@ class SearchResults:
 
 
 class FullTextIndex:
-    """One named index: schema + corpus row store + inverted-index tables."""
+    """One named index: schema + corpus row store + inverted-index tables.
+
+    A search registers temp views of the handle's relations (``view``).
+    ``IndexCatalog`` drops the views of the handles it caches; a
+    standalone handle (``FullTextIndex.build``, ``IndexCatalog.open``
+    with ``corpus=``) is released with ``drop_views()``.  No finalizer
+    does it: dropping a view also uncaches a persisted frame its plan
+    names, and another live object may share that frame.
+    """
 
     def __init__(
         self,
@@ -91,11 +99,6 @@ class FullTextIndex:
         self.tables = tables
         self.id_col = id_col
         self.name = name
-        # opt-in doc-sharded postings copy (index/bucketed.py): set by
-        # enable_doc_bucketed(); the compiler routes multi-term leaf
-        # scans here so phrase/bool intersections group by doc_id
-        # without a corpus-scale Exchange
-        self.doc_bucketed = None
         # frames build() persist()ed (index tables + row store), so an
         # owner can release them
         self.persisted = list(tables.persisted)
@@ -169,21 +172,19 @@ class FullTextIndex:
 
     def view(self, kind: str) -> str:
         """The name of this handle's temp view of one of its relations
-        ("postings", "termstats", "corpus" or "docb", the doc-sharded
-        copy), registered at the first statement that reads it and
-        again after the handle's relation is replaced."""
+        ("postings", "termstats" or "corpus"), registered at the first
+        statement that reads it and again after the handle's relation
+        is replaced."""
         source = {"postings": self.tables.postings,
                   "termstats": self.tables.termstats,
-                  "corpus": self.corpus,
-                  "docb": self.doc_bucketed}[kind]
+                  "corpus": self.corpus}[kind]
         have = self._views.get(kind)
         if have is not None and have[0] is source:
             return have[1]
         # named by object id: unique among live handles, and a view left
         # by a collected handle is simply replaced
         name = f"toshi_ix{id(self):x}_{kind}"
-        frame = source.frame() if kind == "docb" else source
-        frame.createOrReplaceTempView(name)
+        source.createOrReplaceTempView(name)
         self._views[kind] = (source, name)
         return name
 
@@ -197,35 +198,6 @@ class FullTextIndex:
         for name in self.view_names():
             self.spark.catalog.dropTempView(name)
         self._views.clear()
-
-    def enable_doc_bucketed(
-        self,
-        path: str,
-        n_term_partitions: int = 16,
-        n_buckets: int = 32,
-    ) -> "FullTextIndex":
-        """Write the doc-sharded postings copy (one write-time shuffle)
-        and route multi-term queries through it — see
-        index/bucketed.py for the layout and the cost model."""
-        from .index.bucketed import write_doc_bucketed
-
-        self.doc_bucketed = write_doc_bucketed(
-            self.tables.postings,
-            path,
-            table=f"toshi_docb_{self.name}",
-            n_term_partitions=n_term_partitions,
-            n_buckets=n_buckets,
-        )
-        return self
-
-    def attach_doc_bucketed(self, path: str) -> "FullTextIndex":
-        """Attach a doc-sharded copy WRITTEN BY A PRIOR SESSION
-        (metadata-only DDL; bucket spec from the layout sidecar) —
-        write once at ingest, attach at every open."""
-        from .index.bucketed import attach_doc_bucketed
-
-        self.doc_bucketed = attach_doc_bucketed(self.spark, path)
-        return self
 
     @classmethod
     def build(

@@ -841,67 +841,7 @@ class IndexCatalog:
                            id_col="doc_id", name=name)
         ix.term_dict = read_term_dict(self._dir(name), TERM_DICT_MAX_ROWS)
         ix.doc_store = doc_store
-        # attach the doc-sharded postings copy if one exists for THIS
-        # segment set (build_doc_sharded); deletes apply at read via
-        # the handle's tombstone anti-join, so only a manifest change
-        # (new/merged segments) makes the copy fall away
-        from .bucketed import attach_doc_bucketed, read_docb_meta
-
-        docb_path = os.path.join(self._dir(name), "docb")
-        meta = read_docb_meta(docb_path)
-        if meta is not None:
-            fp = meta.get("manifest_fingerprint")
-            if fp == self.manifest_fingerprint(name):
-                handle = attach_doc_bucketed(
-                    self.spark, docb_path,
-                    table=f"toshi_docb_{name}_{fp[:8]}",
-                )
-                ix.doc_bucketed = handle.with_tombstones(tomb)
         return ix
-
-    def manifest_fingerprint(self, name: str) -> str:
-        """md5 of manifest.jsonl alone — the SEGMENT-SET stamp.
-        Tombstones are deliberately excluded (vs
-        :meth:`commit_fingerprint`): deletes never invalidate a
-        doc-sharded postings copy, they are filtered at read."""
-        import hashlib
-
-        man = os.path.join(self._dir(name), "manifest.jsonl")
-        h = hashlib.md5()
-        if os.path.exists(man):
-            with open(man, "rb") as f:
-                h.update(f.read())
-        return h.hexdigest()
-
-    def build_doc_sharded(
-        self,
-        name: str,
-        n_term_partitions: int = 32,
-        n_buckets: int = 64,
-    ) -> str:
-        """Write the doc-sharded postings copy (index/bucketed.py) for
-        this index's COMMITTED segment set under ``<index>/docb`` and
-        stamp it with the manifest fingerprint.  :meth:`open` attaches
-        the copy while the stamp matches; a later flush/merge changes
-        the manifest and the stale copy silently falls away (correct
-        but slower multi-term plans) until this is re-run — the same
-        write-once/attach-forever lifecycle as the segments
-        themselves.  Raw segment postings are written (no tombstone
-        filter): deletes stay read-time."""
-        from .bucketed import write_doc_bucketed
-
-        d = self._dir(name)
-        tables = open_segmented_tables(self.spark, d)
-        fp = self.manifest_fingerprint(name)
-        path = os.path.join(d, "docb")
-        write_doc_bucketed(
-            tables.postings, path,
-            table=f"toshi_docb_{name}_{fp[:8]}",
-            n_term_partitions=n_term_partitions, n_buckets=n_buckets,
-            extra_meta={"manifest_fingerprint": fp},
-        )
-        self._forget(name)  # the next open attaches the copy
-        return path
 
     def commit_fingerprint(self, name: str) -> str:
         """Cheap stamp of the COMMITTED view: manifest bytes + the

@@ -78,15 +78,20 @@ def _held_frames(value) -> list[DataFrame]:
 
 
 def _drop(key: tuple) -> None:
+    value = _ARTIFACTS.pop(key)
     # dependents first: uncaching a frame recompiles every not-yet-loaded
     # cache built on it
-    for df in reversed(_held_frames(_ARTIFACTS.pop(key))):
+    for df in reversed(_held_frames(value)):
         try:
             # persisted frames leave CacheManager now; checkpoint blocks
             # are freed when the unreferenced RDD is GC'd
             df.unpersist(blocking=False)
         except Exception:
             pass
+    # an index handle's temp views hold its plans for the session's life
+    for v in value if isinstance(value, tuple) else (value,):
+        if isinstance(v, FullTextIndex):
+            v.drop_views()
 
 
 def _artifact(spark: SparkSession, name: str, sf_dir: str,

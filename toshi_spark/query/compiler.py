@@ -4,10 +4,10 @@ The reference lowers its DSL 1:1 to Tantivy query objects
 (``toshi-server/src/handle.rs:107-121``); all physical smarts live in
 the library.  Here each search lowers to ONE SQL statement over the
 handle's temp views (``FullTextIndex.view``: postings, row store,
-term dictionary, the doc-sharded copy), and the physical smarts are
-Catalyst's: the postings filter pushes down to the parquet scan,
-posting-list intersection is a join on doc_id, union is UNION ALL +
-GROUP BY sum, difference is a LEFT ANTI join.  One ``spark.sql`` call
+term dictionary), and the physical smarts are Catalyst's: the
+postings filter pushes down to the parquet scan, posting-list
+intersection is a join on doc_id, union is UNION ALL + GROUP BY sum,
+difference is a LEFT ANTI join.  One ``spark.sql`` call
 parses and analyzes the statement, where a DataFrame program paid a
 py4j round trip per operator and per column expression.
 
@@ -162,8 +162,8 @@ class Compiler:
     """Compiles DSL nodes against one index handle.
 
     ``ctx`` is the engine (FullTextIndex): ``view(kind)``, n_docs,
-    avgdl(field), term_df(field, terms), field_terms(field),
-    doc_bucketed, gates, id_col, schema, spark.
+    avgdl(field), term_df(field, terms), field_terms(field), gates,
+    id_col, schema, spark.
     """
 
     def __init__(self, ctx):
@@ -228,22 +228,9 @@ class Compiler:
 
     def _scan(self, field: str, terms: list[str], cols: str,
               hint: str = "") -> str:
-        """The posting rows of ``terms`` in ``field``.  Multi-term
-        scans feed a doc_id intersection/union: when the index carries
-        a doc-sharded postings copy (index/bucketed.py) the bucketed
-        scan satisfies that grouping's distribution and the corpus-scale
-        Exchange disappears.  Single-term lookups stay on the
-        (field, term)-sorted layout, which prunes harder."""
-        docb = self.ctx.doc_bucketed
-        where = f"field = {sql_str(field)}"
-        if docb is not None and len(terms) > 1:
-            view = self.ctx.view("docb")
-            bkts = ", ".join(sql_num(b) for b in docb.buckets(terms))
-            where += f" AND term_bkt IN ({bkts})"
-        else:
-            view = self.ctx.view("postings")
-        return (f"SELECT {hint}{cols} FROM {view} "
-                f"WHERE {where} AND {_in('term', terms)}")
+        """The posting rows of ``terms`` in ``field``."""
+        return (f"SELECT {hint}{cols} FROM {self.ctx.view('postings')} "
+                f"WHERE field = {sql_str(field)} AND {_in('term', terms)}")
 
     def _agg_hint(self, n_rows: int | None) -> str:
         """The scan hint of an aggregating search that reads ``n_rows``

@@ -5,8 +5,8 @@ dictionary, inside the reader.  A catalog handle holds the committed
 dictionary on the driver (``FullTextIndex.term_dict``), so the same
 expansion runs here with no Spark job: :class:`FieldTerms` keeps one
 field's terms sorted (for the regex literal-prefix range) and grouped
-by length as code-point matrices (for a numpy Levenshtein over the
-fuzzy length band).
+by length as code-point matrices (for a numpy Levenshtein or
+restricted Damerau DP over the fuzzy length band).
 
 A regex expands on the driver only when :func:`python_regex` can
 translate it to a Python pattern that provably matches the same terms
@@ -67,18 +67,24 @@ def field_terms(term_dict: dict[tuple[str, str], int]) -> dict[str, FieldTerms]:
     return {f: FieldTerms(ts) for f, ts in grouped.items()}
 
 
-def _levenshtein(cols: np.ndarray, value: str, bound: int) -> np.ndarray:
+def _edit_distance(cols: np.ndarray, value: str, bound: int,
+                   transposition: bool) -> np.ndarray:
     """Levenshtein distance, capped at ``bound + 1``, of each of n terms
-    of one length L to ``value``.  ``cols`` is the (L, n) code-point
-    matrix, one contiguous row per character position.  The DP is
-    vectorized over the n terms and only fills the diagonal band
-    ``|i - j| ≤ bound`` (Ukkonen): a cell off the band exceeds it."""
+    of one length L to ``value``; with ``transposition`` the restricted
+    Damerau (optimal string alignment) distance, which also counts a
+    swap of two adjacent characters as one edit.  ``cols`` is the (L, n)
+    code-point matrix, one contiguous row per character position.  The
+    DP is vectorized over the n terms and only fills the diagonal band
+    ``|i - j| ≤ bound`` (Ukkonen): a cell off the band exceeds it, as no
+    edit, a swap included, changes the length difference by more than
+    one."""
     width = cols.shape[0]
     # no distance exceeds width + len(value), so the cap fits an int32
     bound = min(bound, width + len(value))
     cap = np.int32(bound + 1)
-    # prev[j] = D[i-1][j] on the band (scalars until a term column
-    # enters); cells outside the band read as the cap
+    # prev[j] = D[i-1][j] and prev2[j] = D[i-2][j] on the band (scalars
+    # until a term column enters); cells outside the band read as the cap
+    prev2 = {}
     prev = {j: np.int32(j) for j in range(min(width, bound) + 1)}
     for i, ch in enumerate(value, 1):
         code = np.uint32(ord(ch))
@@ -86,11 +92,17 @@ def _levenshtein(cols: np.ndarray, value: str, bound: int) -> np.ndarray:
         if i <= bound:
             cur[0] = np.int32(i)
         for j in range(max(1, i - bound), min(width, i + bound) + 1):
-            d = np.minimum(prev.get(j - 1, cap) + (cols[j - 1] != code),
+            cost = cols[j - 1] != code
+            d = np.minimum(prev.get(j - 1, cap) + cost,
                            prev.get(j, cap) + 1)
             d = np.minimum(d, cur.get(j - 1, cap) + 1)
+            if transposition and i > 1 and j > 1:
+                swap = ((cols[j - 2] == code)
+                        & (cols[j - 1] == np.uint32(ord(value[i - 2]))))
+                d = np.minimum(d, np.where(swap, prev2.get(j - 2, cap) + cost,
+                                           cap))
             cur[j] = np.minimum(d, cap)
-        prev = cur
+        prev2, prev = prev, cur
     out = prev.get(width, cap)
     n = cols.shape[1]
     return np.broadcast_to(out, (n,)) if np.ndim(out) == 0 else out
@@ -103,27 +115,14 @@ def fuzzy_terms(ft: FieldTerms, value: str, distance: int,
     Levenshtein, the same sets the Spark expansion selects."""
     if distance == 0:
         return [value] if ft.has(value) else []
-    # a term within distance d of value differs from it in length by at
-    # most d; with transpositions at d ≥ 2 the Levenshtein bound is 2d
-    # (a transposition is two plain edits) and _damerau judges the
-    # d < lev ≤ 2d shell, as the Spark path does
-    shell = transposition and distance >= 2
-    bound = 2 * distance if shell else distance
-    out = set()
-    if transposition and distance == 1:
-        # Damerau ≤ 1 ⇔ Levenshtein ≤ 1 or one adjacent swap of value
-        out = {t for t in (value[:i] + value[i + 1] + value[i]
-                           + value[i + 2:]
-                           for i in range(len(value) - 1)
-                           if value[i] != value[i + 1]) if ft.has(t)}
+    out = []
     for n, (ts, cols) in ft.by_len.items():
+        # a term within distance d of value differs from it in length
+        # by at most d
         if abs(n - len(value)) > distance:
             continue
-        lev = _levenshtein(cols, value, bound)
-        for k in np.flatnonzero(lev <= bound):
-            if (lev[k] <= distance or not shell
-                    or _damerau(ts[k], value, distance) <= distance):
-                out.add(ts[k])
+        dist = _edit_distance(cols, value, distance, transposition)
+        out.extend(ts[k] for k in np.flatnonzero(dist <= distance))
     return sorted(out)
 
 

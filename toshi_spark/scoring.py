@@ -33,13 +33,6 @@ def idf_col(n_docs: int, df_col: Column) -> Column:
     )
 
 
-def tf_norm_col(tf_col: Column, doclen_col: Column, avgdl: float) -> Column:
-    denom = tf_col + F.lit(K1) * (
-        F.lit(1.0 - B) + F.lit(B) * doclen_col / F.lit(float(avgdl))
-    )
-    return tf_col * F.lit(K1 + 1.0) / denom
-
-
 def tf_norm_dyn(tf_col: Column, doclen_col: Column, avgdl_col: Column) -> Column:
     denom = tf_col + F.lit(K1) * (
         F.lit(1.0 - B) + F.lit(B) * doclen_col / avgdl_col
